@@ -9,8 +9,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Aggregates.q1(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** One entry per implemented operator from SURVEY.md §2. A `val`:
+    * the union of the module maps is built once, not on every lookup. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     Aggregates.queries ++ Relational.queries ++ Windows.queries ++
       Generators.queries ++ Scalars.queries ++ DesFiles.queries ++
       StreamingOps.queries ++ LlmOps.queries ++ Analytics.queries ++

@@ -183,7 +183,9 @@ object Tables {
   // one skips the parquet footer read/schema inference that
   // spark.read.parquet pays per call (72 queries × 10 tables adds up in
   // the bench loop). Keyed by session so a stopped session's plans are
-  // never resurrected.
+  // never resurrected. Memo artifacts avoid the same cost differently:
+  // ops.Memo resolves each artifact's schema once, after its write, and
+  // reads it back with that schema (see the Memo scaladoc).
   private val cache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
 

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Materialize-once-per-(session, corpus) parquet cache for expensive
   * shared intermediates (the near-dup cluster labels, the shingle
@@ -15,14 +16,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a cached plan on freed blocks; a parquet dir is immune and is also
   * exactly what survives executor loss on a real cluster.
   *
-  * Lifecycle (the round-4 advisor ask): entries are keyed by the
-  * session's identity hash + corpus dir + kind, BOUNDED (eldest entry
-  * evicted past [[Memo.MaxEntries]]: its dir is deleted and its JVM
-  * shutdown hook deregistered), so a long-lived multi-session service
-  * no longer accumulates temp dirs and hooks without bound. A stopped
-  * session is never pinned (the key holds no session reference); an
-  * identity-hash reuse after GC would only re-share the deterministic,
-  * content-identical dir for the same corpus — harmless.
+  * Lifecycle: an entry is the artifact's dir, the JVM shutdown hook
+  * that deletes it, and its SCHEMA, resolved once per artifact right
+  * after the write. Every read — the builder's own and every later hit
+  * — is then `spark.read.schema(schema).parquet(dir)`: a bare
+  * `spark.read.parquet(dir)` would re-list the dir, re-read footers and
+  * run a one-task schema-inference job on each consumer's build path.
+  * Entries are keyed by the session's identity hash + corpus dir +
+  * kind, BOUNDED (eldest entry evicted past [[Memo.MaxEntries]]: its
+  * dir is deleted, its hook deregistered and its schema dropped with
+  * it), so a long-lived multi-session service no longer accumulates
+  * temp dirs and hooks without bound. A stopped session is never
+  * pinned (the key holds no session reference, and a StructType holds
+  * none either); an identity-hash reuse after GC would only re-share
+  * the deterministic, content-identical dir for the same corpus —
+  * harmless.
   */
 private[graft] object Memo {
 
@@ -31,10 +39,22 @@ private[graft] object Memo {
     * 32 is a service-hygiene backstop, not a tuning knob — eviction of
     * an entry still referenced by an in-flight plan is only possible
     * past 32 live (session, corpus, kind) combinations. */
-  private val MaxEntries = 32
+  private[graft] val MaxEntries = 32
 
-  private val entries =
-    new java.util.LinkedHashMap[(String, String), (String, sys.ShutdownHookThread)]
+  /** One materialized artifact: its dir, the hook that deletes it at
+    * JVM exit, and the schema resolved once after the write. */
+  private[graft] final case class Entry(
+      path: String, schema: StructType, hook: sys.ShutdownHookThread)
+
+  private val entries = new java.util.LinkedHashMap[(String, String), Entry]
+
+  /** The live entry for (spark, sfDir, kind), if any. */
+  private[graft] def entry(spark: SparkSession, sfDir: String,
+      kind: String): Option[Entry] =
+    entries.synchronized(Option(entries.get(key(spark, sfDir, kind))))
+
+  private def key(spark: SparkSession, sfDir: String, kind: String) =
+    (String.valueOf(System.identityHashCode(spark)), s"$kind@$sfDir")
 
   /** Wall-clock seconds of each artifact BUILD this JVM actually ran
     * (cache hits record nothing) — the decomposition of the
@@ -65,41 +85,41 @@ private[graft] object Memo {
     * it would serialize every other session's memo access behind one
     * builder. The cost is that two racing builders for the same key
     * may both materialize; the loser's dir is deleted and the winner's
-    * is shared — correctness is unaffected (builds are deterministic). */
+    * entry (dir and schema) is shared — correctness is unaffected
+    * (builds are deterministic). */
   def parquet(spark: SparkSession, sfDir: String, kind: String)
       (build: => DataFrame): DataFrame = {
-    val uuid = String.valueOf(System.identityHashCode(spark))
-    val key = (uuid, s"$kind@$sfDir")
-    val hit0 = entries.synchronized(Option(entries.get(key)))
-    val path = hit0 match {
-      case Some((p, _)) => p
-      case None =>
-        val out = java.nio.file.Files.createTempDirectory(s"graft-$kind-")
-        val hook = sys.addShutdownHook(deleteDir(out.toString))
-        val t0 = System.nanoTime()
-        build.write.mode("overwrite").parquet(out.toString)
-        buildSeconds.merge(s"$kind@$sfDir",
-          (System.nanoTime() - t0) / 1e9, (a, b) => a + b)
-        entries.synchronized {
-          val raced = entries.get(key)
-          if (raced != null) {
-            try hook.remove() catch { case _: Throwable => () }
-            deleteDir(out.toString)
-            raced._1
-          } else {
-            entries.put(key, (out.toString, hook))
-            while (entries.size > MaxEntries) {
-              val it = entries.entrySet().iterator()
-              val eldest = it.next()
-              it.remove()
-              val (p, h) = eldest.getValue
-              try h.remove() catch { case _: Throwable => () }
-              deleteDir(p)
-            }
-            out.toString
+    val k = key(spark, sfDir, kind)
+    val e = entry(spark, sfDir, kind).getOrElse {
+      val out = java.nio.file.Files.createTempDirectory(s"graft-$kind-")
+      val hook = sys.addShutdownHook(deleteDir(out.toString))
+      val t0 = System.nanoTime()
+      build.write.mode("overwrite").parquet(out.toString)
+      buildSeconds.merge(s"$kind@$sfDir",
+        (System.nanoTime() - t0) / 1e9, (a, b) => a + b)
+      // the one schema inference this artifact ever pays — outside the
+      // build timer, so build_s keeps meaning the build alone
+      val built = Entry(out.toString,
+        spark.read.parquet(out.toString).schema, hook)
+      entries.synchronized {
+        val raced = entries.get(k)
+        if (raced != null) {
+          try hook.remove() catch { case _: Throwable => () }
+          deleteDir(out.toString)
+          raced
+        } else {
+          entries.put(k, built)
+          while (entries.size > MaxEntries) {
+            val it = entries.entrySet().iterator()
+            val eldest = it.next().getValue
+            it.remove()
+            try eldest.hook.remove() catch { case _: Throwable => () }
+            deleteDir(eldest.path)
           }
+          built
         }
+      }
     }
-    spark.read.parquet(path)
+    spark.read.schema(e.schema).parquet(e.path)
   }
 }

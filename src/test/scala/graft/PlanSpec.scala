@@ -513,16 +513,31 @@ class PlanSpec extends SparkSpec {
   }
 
   test("auc: census is partial-agged; the only window is the P-row offsets") {
-    val plan = finalSection(finalPlan(
-      graft.ops.Quality.statsAuc(spark, sfDir)))
+    val (df, truncated) =
+      truncatedPlans(graft.ops.Quality.statsAuc(spark, sfDir))
+    val plan = finalSection(finalPlan(df))
+    // TwoPass.cumsum truncates its pass-2 relation, so the census and
+    // the partition-local running sum execute in that checkpoint, and
+    // only the offsets + the AUC fold remain in the final plan
+    val pass2 = truncated.map(finalSection)
+      .filter(_.contains("running_sum_long"))
+    assert(pass2.size === 1,
+      s"expected one truncated pass-2 plan:\n${truncated.mkString("\n")}")
     // the distinct-score census must combine map-side, and the global
     // cumsum must ride TwoPass (partition-count offsets window), not a
     // corpus-wide `ORDER BY score` window over the census rows
-    assert("HashAggregate".r.findAllIn(plan).size >= 2, plan.take(1200))
+    assert("HashAggregate".r.findAllIn(pass2.head).size >= 2,
+      pass2.head.take(1200))
+    assert("Window".r.findAllIn(pass2.head).size === 0,
+      s"no window may run over the census rows:\n${pass2.head.take(1500)}")
     assert("Window".r.findAllIn(plan).size === 1,
       s"expected only TwoPass's P-row offsets window:\n${plan.take(1500)}")
-    assert(plan.contains("MapPartitions"),
-      s"expected TwoPass's partition-local fold:\n${plan.take(1200)}")
+    // the running sum is the codegen'd expression, not a Row-encoder
+    // fold: no serde pair on either side of the truncate
+    for (p <- Seq(pass2.head, plan)) {
+      assert(!p.contains("DeserializeToObject"), p.take(1200))
+      assert(!p.contains("SerializeFromObject"), p.take(1200))
+    }
   }
 
   test("whiten: the 64-row dim stats broadcast back onto the stream") {

@@ -105,11 +105,7 @@ class PlanSweepSpec extends SparkSpec
     // k-row tops / bounded slices: rank/cumsum over top-100 (zipf),
     // top-1000 (vocab prune/coverage), or k-row fused candidate lists
     "q_text_zipf", "q_vocab_prune_oov", "q_vocab_coverage",
-    "q_rank_fusion_borda", "q_sim_hybrid_rrf",
-    // round-13: the adaptive screen's priced-mass census rides
-    // TwoPass.cumsum over the df-level spectrum (LlmOps.ctpMassCensus
-    // — the P-row offsets window again, metadata scale)
-    "q_dedup_containment_prefix")
+    "q_rank_fusion_borda", "q_sim_hybrid_rrf")
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name: no cartesian product in the final plan") {

@@ -26,4 +26,29 @@ trait SparkSpec extends AnyFunSuite {
     df.collect()
     df.queryExecution.executedPlan.toString
   }
+
+  /** `body`'s result plus the executed plans of the checkpoint actions
+    * it ran while building it. [[Tables.truncate]] materializes
+    * eagerly, so a truncated subtree never appears in the consumer's
+    * final plan — its shape is pinned on these plans instead. */
+  def truncatedPlans[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (action == "localCheckpoint" || action == "checkpoint")
+          plans.add(qe.executedPlan.toString)
+      override def onFailure(action: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      (out, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
