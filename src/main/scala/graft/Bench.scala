@@ -1,49 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
-  /** Drop every persisted block NOW, synchronously on the driver.
-    * localCheckpoint blocks are only reclaimed when a GC notices the
-    * RDD object is unreachable AND the async ContextCleaner gets
-    * around to it; across a 99-query session the un-collected blocks
-    * become exactly the heap pressure that inflated the round-2 driver
-    * bench 1.42× on unchanged queries (VERDICT r2). A query boundary
-    * is a safe point: no declared query reuses another's checkpointed
-    * intermediates (the Tables plan cache holds parquet scan plans
-    * only, never checkpoints). */
-  private def release(spark: SparkSession): Unit = {
-    // blocking = true: the async form only enqueues RemoveRdd, so the
-    // next query's timed region could still be paying this query's
-    // eviction; this runs in the untimed gap, where waiting is free
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    System.gc()
-  }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // wide-catalog keys (300-col scan prune) legitimately exceed the
-      // 25-field default when anything stringifies their plan -- the
-      // resulting "Truncated the string representation" WARN was the
-      // last line keeping artifact tails from being WARN-free (r12)
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      // pinned like Query/Verify/Profile: launched outside sbt on a
-      // non-UTC host, timestamp-literal casts would otherwise select a
-      // different workload than the one Verify hash-matches
-      .config("spark.sql.session.timeZone", "UTC")
-      // RocksDB state store: required by transformWithState (state API
-      // v2) and the production-grade choice regardless (off-heap,
-      // spill-capable state at scale)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quiet()
+    val spark = Session.local(32)
     // untimed warmup: run EVERY query once at the smallest SF so JIT +
     // first-codegen + first-broadcast cost never lands inside a
     // measured rep (each query is only measured once). NonFatal only:
@@ -51,7 +11,7 @@ object Bench {
     val w = "/root/testdata/sf0.001"
     SparkEntry.queries.foreach { case (_, fn) =>
       try { fn(spark, w).count() } catch { case NonFatal(_) => () }
-      release(spark)
+      Session.release(spark)
     }
     // untimed Memo pre-materialization AT THE TARGET SF: the shared
     // artifacts (shingle index, cluster/semantic labels, ANN pairs, PQ
@@ -72,7 +32,7 @@ object Bench {
     memoTriggers.foreach { k =>
       SparkEntry.queries.get(k).foreach { fn =>
         try { fn(spark, sfDir).count() } catch { case NonFatal(_) => () }
-        release(spark)
+        Session.release(spark)
       }
     }
     val memoSec = (System.nanoTime() - w0) / 1e9
@@ -96,7 +56,7 @@ object Bench {
         val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         // untimed: drop this query's checkpoint blocks + broadcasts so a
         // heavy query's garbage isn't paid for by whoever runs next
-        release(spark)
+        Session.release(spark)
         sec
       }
       val first = rep()

@@ -23,6 +23,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * when not. Credentials/DSN have no analogue here (the corpus is
   * parquet; live-Oracle access would come through
   * `graft.sources.Sources.jdbc`, the interface slot).
+  *
+  * The facade runs in the caller's session and sets nothing on it:
+  * build it with [[Session.local]] to get the settings the mains run
+  * under (UTC, `GraftExtensions`, shuffle partitions = cores, …).
   */
 class DesDb(spark: SparkSession, sfDir: String) {
   Tables.registerViews(spark, sfDir)

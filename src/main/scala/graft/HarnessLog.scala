@@ -1,8 +1,8 @@
 package graft
 
-/** Log hygiene for the driver-contract mains (Bench/Verify/Omits/
-  * Profile/Scale): their per-query release unpersists locally-
-  * checkpointed RDDs, and `org.apache.spark.rdd.RDD` WARNs "RDD N was
+/** Log hygiene for the mains, installed by [[Session.local]]: their
+  * per-query [[Session.release]] unpersists locally-checkpointed RDDs,
+  * and `org.apache.spark.rdd.RDD` WARNs "RDD N was
   * locally checkpointed, its lineage has been truncated and cannot be
   * recomputed after unpersisting" once per block — hundreds of lines
   * that drowned the BENCH_r10.json artifact tail (VERDICT r10 #3).

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 
@@ -27,21 +26,7 @@ object Omits {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val outPath = if (args.length > 1) args(1) else "/root/repo/OMITS_r8.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // wide-catalog keys (300-col scan prune) legitimately exceed the
-      // 25-field default when anything stringifies their plan -- the
-      // resulting "Truncated the string representation" WARN was the
-      // last line keeping artifact tails from being WARN-free (r12)
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quiet()
+    val spark = Session.local(8)
     import spark.implicits._
     import graft.ops._
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-query plan/timing inspector (not part of the driver contract).
   *
@@ -10,416 +10,43 @@ import org.apache.spark.sql.SparkSession
   * number here is directly comparable to a BENCH_r{N}.json entry.
   */
 object Profile {
-  /** Exploratory sub-plans for isolating stage costs; not part of the
-    * driver contract. Probes REUSE the production builders (never
-    * copy-paste them) so they measure the shipped plan. */
-  private val adhoc: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
+  /** Probe sub-plans an open measurement still cites (not part of the
+    * driver contract). Probes REUSE the production builders (never
+    * copy-paste them) so they measure the shipped plan.
+    *
+    * ANN pair-mining stage decomposition (round 12, VERDICT r11 #7:
+    * ann-pairs is the dominant memo-warmup artifact at x10):
+    * candidate distinct alone vs the full mine (candidates + two
+    * SHUFFLE_HASH array joins + exact dot verify). */
+  private val adhoc: Map[String, (SparkSession, String) => DataFrame] =
     Map(
-      "x_shingles" -> ((s, dir) =>
-        graft.ops.LlmOps.shingleDf(Tables(s, dir, "documents"))),
-      "x_shingles_flatmap" -> ((s, dir) => {
-        import s.implicits._
-        Tables.spread(Tables(s, dir, "documents"))
-          .select($"doc_id", $"text").as[(Long, String)]
-          .flatMap { case (id, text) =>
-            val toks = text.split(" ", -1)
-            if (toks.length < 3) Iterator.empty
-            else {
-              val seen = new scala.collection.mutable.HashSet[String]
-              (0 to toks.length - 3).iterator
-                .map(i => s"${toks(i)} ${toks(i + 1)} ${toks(i + 2)}")
-                .filter(seen.add)
-                .map((id, _))
-            }
-          }
-          .toDF("doc_id", "shingle")
-      }),
-      // stop-shingle stress corpus: every document gains a universal
-      // 12-token boilerplate suffix (10 corpus-wide shingles), the
-      // web-corpus condition the prefix-filtered join is designed for.
-      // The inverted-index formulation pairs ALL n²/2 docs through
-      // EACH universal shingle; the prefix filter never emits them
-      // (the most frequent shingles sort last and fall outside every
-      // doc's rarest-40% prefix). Run both probes for the asymmetry —
-      // measured numbers are recorded in SCALE.md.
-      "x_ngram_stopshingle" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        graft.ops.LlmOps.dedupNgramJaccardOn(
-          Tables(s, dir, "documents")
-            .withColumn("text", concat(col("text"), lit(" zz1 zz2 zz3 zz4 zz5 zz6 zz7 zz8 zz9 zz10 zz11 zz12"))))
-      }),
-      "x_prefix_stopshingle" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        graft.ops.LlmOps.dedupJaccardPrefixOn(
-          Tables(s, dir, "documents")
-            .withColumn("text", concat(col("text"), lit(" zz1 zz2 zz3 zz4 zz5 zz6 zz7 zz8 zz9 zz10 zz11 zz12"))))
-      }),
-      // round-10 edit-miner stage decomposition (x10 regression hunt):
-      // candidate generation alone vs rescue alone vs the full capped
-      // candidate set — isolates whether the cost is candidates or DP
-      // round-11 containment-prefix stage decomposition (screen vs
-      // lossless x10 comparison): candidate generation alone for both
-      // rungs, the exact-dup rescue alone, and the full lossless key —
-      // isolates whether cost sits in candidates, rescue, or verify
-      "x_ctp_cand_screened" -> ((s, dir) =>
-        graft.ops.LlmOps.containmentPrefixCandScreened(
-          graft.ops.LlmOps.shingleIndex(s, dir),
-          Tables(s, dir, "documents"))),
-      "x_ctp_cand_lossless" -> ((s, dir) =>
-        graft.ops.LlmOps.containmentPrefixCandLossless(
-          graft.ops.LlmOps.shingleIndex(s, dir))),
-      "x_ctp_rescue" -> ((s, dir) =>
-        graft.ops.LlmOps.exactDupCandidates(Tables(s, dir, "documents"))),
-      "x_ctp_cand_distinct" -> ((s, dir) =>
-        graft.ops.LlmOps.containmentPrefixCandScreened(
-          graft.ops.LlmOps.shingleIndex(s, dir),
-          Tables(s, dir, "documents"))
-          .unionAll(graft.ops.LlmOps.exactDupCandidates(
-            Tables(s, dir, "documents")))
-          .distinct()),
-      // cap-shape probes: the full screened key at a FLAT df cap
-      // (capFrac 0) — output count vs the default's measures what a
-      // corpus-independent cap would lose; runtime measures what the
-      // growing 1% term costs
-      "x_ctp_key_cap64" -> ((s, dir) => {
-        val sh = graft.ops.LlmOps.shingleIndex(s, dir)
-        val docs = Tables(s, dir, "documents")
-        graft.ops.LlmOps.verifyContainment(
-          graft.ops.LlmOps.containmentPrefixCandScreened(sh, docs, 64.0, 0.0)
-            .unionAll(graft.ops.LlmOps.exactDupCandidates(docs))
-            .distinct(), sh)
-      }),
-      // round-13 (VERDICT r12 #1): the UN-COLLAPSED screened key — the
-      // pre-r12 formulation whose generous screen was the measured x30
-      // ENOSPC regime (217M candidates × ~1.5 KB set arrays). Under
-      // the adaptive budget the same plan self-protects (x30 cap walks
-      // 1500 → 150, ~14M candidates); this probe is the completes-or-
-      // dies witness, and its row count vs x_ctp_key_cap64 measures
-      // the recall the adaptive cap buys back over the flat floor.
-      "x_ctp_key_uncollapsed" -> ((s, dir) => {
-        val sh = graft.ops.LlmOps.shingleIndex(s, dir)
-        val docs = Tables(s, dir, "documents")
-        graft.ops.LlmOps.verifyContainment(
-          graft.ops.LlmOps.containmentPrefixCandScreened(sh, docs)
-            .unionAll(graft.ops.LlmOps.exactDupCandidates(docs))
-            .distinct(), sh)
-      }),
-      "x_ctp_sets" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        graft.ops.LlmOps.shingleIndex(s, dir).groupBy(col("doc_id"))
-          .agg(collect_list(col("shingle")).as("sh_set"),
-            count(lit(1)).as("n_sh"))
-      }),
-      "x_ctp_lossless" -> ((s, dir) =>
-        graft.ops.LlmOps.dedupContainmentPrefixLossless(
-          graft.ops.LlmOps.shingleIndex(s, dir))),
-      "x_edit_cand_capped" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val sh = graft.ops.LlmOps.shingleIndex(s, dir)
-        graft.ops.LlmOps.shinglePairCounts(
-            graft.ops.LlmOps.cappedShingles(sh, Tables(s, dir, "documents")))
-          .filter(col("common") >= 5)
-      }),
-      "x_edit_rescue" -> ((s, dir) =>
-        graft.ops.LlmOps.exactDupCandidates(Tables(s, dir, "documents"))),
-      "x_cand_capped_full" -> ((s, dir) =>
-        graft.ops.LlmOps.cappedCandidates(
-          graft.ops.LlmOps.shingleIndex(s, dir),
-          Tables(s, dir, "documents"))),
-      "x_shingle_join" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        import s.implicits._
-        val sh = graft.ops.LlmOps.shingleDf(Tables(s, dir, "documents"))
-        sh.select($"doc_id".as("doc_a"), $"shingle")
-          .join(sh.select($"doc_id".as("doc_b"), $"shingle"), "shingle")
-          .filter($"doc_a" < $"doc_b")
-          .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("common"))
-      }),
-      // the naive pure-range join the bucket decomposition replaces —
-      // Catalyst has no equi key to hash on and plans BNL. Run against
-      // x_interval_bucketed (the shipped q_join_interval_bucketed) for
-      // the measured asymmetry; numbers in SCALE.md.
-      "x_interval_bnl" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        import s.implicits._
-        val e = Tables(s, dir, "events")
-        val p = e.filter($"event_type" === "purchase")
-          .select($"event_id", $"ts".as("pts"))
-        val c = e.filter($"event_type" === "click").select($"ts".as("cts"))
-        p.join(c, $"cts" >= $"pts" - expr("INTERVAL 5 MINUTES")
-            && $"cts" <= $"pts" + expr("INTERVAL 5 MINUTES"), "left")
-          .groupBy($"event_id", $"pts")
-          .agg(count($"cts").as("n_nearby_clicks"))
-      }),
-      "x_interval_bucketed" -> ((s, dir) =>
-        graft.ops.Relational.joinIntervalBucketed(s, dir)),
-      // A/B for the set-overlap verify kernel: the same banded pair
-      // workload (each doc against its next 10 ids — ~10n pairs of
-      // ~290-element shingle-set arrays) counted via the builtin
-      // size(array_intersect(…)) vs the array_overlap_count kernel.
-      // The builtin probe must EXCLUDE the RewriteSetOverlap rule this
-      // session ships (GraftExtensions), or the optimizer silently
-      // rewrites the baseline onto the very kernel under test and the
-      // A/B measures kernel vs kernel. Measured numbers in SCALE.md.
-      "x_overlap_builtin" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        s.conf.set("spark.sql.optimizer.excludedRules",
-          "graft.plans.RewriteSetOverlap")
-        overlapWorkload(s, dir)
-          .select(size(array_intersect(col("sa"), col("sb"))).as("c"))
-          .agg(sum(col("c")))
-      }),
-      "x_overlap_kernel" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        overlapWorkload(s, dir)
-          .select(graft.functions.SetExpressions
-            .overlapCount(s)(col("sa"), col("sb")).as("c"))
-          .agg(sum(col("c")))
-      }),
-      // A/B for the per-source cap under DOMAIN SKEW: a ×64 fan-out of
-      // the corpus mapped to ONE hot source (~320k rows/domain at
-      // sf0.1 — the giant-domain regime in miniature). The naive
-      // rank-window formulation funnels the whole domain through a
-      // single window task's sort; the shipped TopKAgg heap
-      // (q_sample_cap_per_source) partial-aggregates map-side and
-      // ships k pairs per partition. Numbers recorded in SCALE.md.
-      "x_cap_window_skew" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.expressions.Window
-        import s.implicits._
-        val w = Window.partitionBy($"source").orderBy($"hk", $"doc_id")
-        capSkewWorkload(s, dir)
-          .withColumn("rk", row_number().over(w))
-          .filter($"rk" <= 10)
-      }),
-      // the heap side reuses the PRODUCTION core (LlmOps.capHeapOn),
-      // so this A/B keeps measuring the shipped formulation if k, the
-      // tie-break, or the hash ever change
-      // the scale-killer formulation q_ids_contiguous exists to avoid:
-      // row_number() over an unpartitioned global ORDER BY funnels the
-      // whole corpus through ONE task. Same output, same filter — run
-      // against the shipped two-pass key for the measured asymmetry
-      // (at sf0.1 the gap is wall-clock-visible even at 5k rows; at
-      // 100 TB the naive form simply does not finish).
-      "x_ids_naive" -> ((s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.functions._
-        Tables(s, dir, "documents")
-          .select(col("doc_id"))
-          .withColumn("row_id",
-            row_number().over(Window.orderBy(col("doc_id"))) - 1)
-          .filter(col("doc_id") % 37 === 0)
-          .orderBy(col("doc_id"))
-      }),
-      // the unfused constraint suite: one aggregate pass PER CHECK
-      // (3 documents scans + 3 events scans) vs the shipped fused
-      // single-scan-per-table plan — the Deequ-style optimization
-      // q_quality_constraints claims, measured
-      "x_quality_unfused" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        val docs = Tables(s, dir, "documents")
-        val events = Tables(s, dir, "events")
-        def one(name: String, df: org.apache.spark.sql.DataFrame,
-            viol: org.apache.spark.sql.Column) =
-          df.agg(count(lit(1)).cast("long").as("n_checked"),
-            count(when(viol, lit(1))).cast("long").as("n_violations"))
-            .select(lit(name).as("check_name"), col("n_checked"),
-              col("n_violations"))
-        Seq(
-          one("documents.lang_accepted", docs,
-            !col("lang").isin("de", "en", "es", "fr", "zh")),
-          one("documents.nchars_consistent", docs,
-            length(col("text")) =!= col("n_chars")),
-          one("documents.text_nonempty", docs,
-            col("text").isNull || length(col("text")) === 0),
-          one("events.ts_in_range", events,
-            col("ts") < to_timestamp(lit("2024-01-01")) ||
-              col("ts") >= to_timestamp(lit("2024-02-01"))),
-          one("events.type_accepted", events,
-            !col("event_type").isin("view", "click", "purchase",
-              "signup", "error")),
-          one("events.value_nonneg", events, col("value") < 0.0)
-        ).reduce(_.unionAll(_)).orderBy(col("check_name"))
-      }),
-      "x_cap_heap_skew" -> ((s, dir) =>
-        graft.ops.LlmOps.capHeapOn(capSkewWorkload(s, dir), 10)),
-      // A/B for the rolling-distinct rewrite: the range-join
-      // formulation (the DuckDB oracle's shape — day grid joined to
-      // every user-day within 6 days) vs the shipped bounded ×7
-      // explode (q_events_wau). The range join's pair space is
-      // window-length × |user-days| THROUGH A JOIN (at 100 TB, a
-      // shuffle of that product); the explode ships 7·|user-days|
-      // pre-aggregated rows. Measured numbers in SCALE.md.
-      "x_winnow_sel" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        graft.ops.LlmOps.winnowSel(Tables(s, dir, "documents"))
-          .agg(sum(size(col("sel"))))
-      }),
-      "x_winnow_inv_norules" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        s.conf.set("spark.sql.optimizer.excludedRules",
-          "graft.plans.RewriteVectorDot,graft.plans.RewriteSetOverlap")
-        graft.ops.LlmOps.winnowSel(Tables(s, dir, "documents"))
-          .select(col("doc_id"), explode(col("sel")).as("fp"))
-          .groupBy(col("fp")).count().agg(sum(col("count") * col("count")))
-      }),
-      "x_winnow_inv" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        graft.ops.LlmOps.winnowSel(Tables(s, dir, "documents"))
-          .select(col("doc_id"), explode(col("sel")).as("fp"))
-          .groupBy(col("fp")).count().agg(sum(col("count") * col("count")))
-      }),
-      // A/B for the triangle orientation under a HUB: kNN edges plus
-      // one synthetic hub (id -1) adjacent to EVERY vector. Id-ordered
-      // orientation makes the lowest id the wedge center — the hub
-      // enumerates n²/2 wedges; degree ordering orients every hub edge
-      // INTO the hub (max degree), so the hub is never a center and
-      // the wedge space stays Σ d_out² = O(m^1.5). Same triangle set
-      // either way. Measured numbers in SCALE.md.
-      "x_tri_hub_degorder" -> ((s, dir) =>
-        graft.ops.LlmOps.triangleCountOn(triHubWorkload(s, dir))),
-      "x_tri_hub_idorder" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        import s.implicits._
-        val und = triHubWorkload(s, dir)
-        val e1 = und.select($"lo".as("src"), $"hi".as("v"))
-        val e2 = und.select($"lo".as("src"), $"hi".as("w"))
-        val wedges = e1.join(e2, Seq("src")).filter($"v" < $"w")
-        val tris = wedges.join(
-          und.select($"lo".as("v"), $"hi".as("w")), Seq("v", "w"))
-          .select($"src", $"v", $"w")
-        tris.select(explode(array($"src", $"v", $"w")).as("node"))
-          .groupBy($"node").agg(count(lit(1)).as("n_triangles"))
-          .orderBy($"node")
-      }),
-      "x_wau_rangejoin" -> ((s, dir) => {
-        import org.apache.spark.sql.functions._
-        import s.implicits._
-        val ud = graft.Tables(s, dir, "events")
-          .select(to_date($"ts").as("d"), $"user_id").distinct()
-        ud.select($"d".as("day")).distinct()
-          .join(ud, ud("d").between(date_sub($"day", 6), $"day"))
-          .groupBy($"day").agg(countDistinct($"user_id").as("wau"))
-          .orderBy($"day")
-      }),
-      // ANN pair-mining stage decomposition (round 12, VERDICT r11 #7:
-      // ann-pairs is the dominant memo-warmup artifact at x10):
-      // candidate distinct alone vs the full mine (candidates + two
-      // SHUFFLE_HASH array joins + exact dot verify)
       "x_ann_cand" -> ((s, dir) =>
         graft.ops.LlmOps.annBandCandidates(s, dir)),
       "x_ann_full" -> ((s, dir) =>
-        graft.ops.LlmOps.mineAnnPairs(s, dir)),
-      // round-14 A/B for the census fold (VERDICT r13 #2): the RETIRED
-      // r13 timed shape — declared key with the priced-mass census
-      // derived INLINE (memoized shingles + dup-groups, census not) —
-      // against the shipped q_dedup_containment_prefix, which reads
-      // the ctp-census memo. Same plan otherwise; the delta is the
-      // census subtree's per-execution cost.
-      "x_ctp_key_inlinecensus" -> ((s, dir) =>
-        graft.ops.LlmOps.dedupContainmentPrefixScreened(
-          graft.ops.LlmOps.shingleIndex(s, dir),
-          Tables(s, dir, "documents"),
-          Some(graft.ops.LlmOps.dupGroupsMemo(s, dir))))
-    )
-
-  /** One-hot-domain skewed cap workload shared by the x_cap probes:
-    * ×64 corpus fan-out, all rows in one source, synthetic distinct
-    * doc ids. */
-  private def capSkewWorkload(s: SparkSession, dir: String) = {
-    import org.apache.spark.sql.functions._
-    import s.implicits._
-    Tables.spread(Tables(s, dir, "documents").select($"doc_id"))
-      .select(explode(sequence(lit(0), lit(63))).as("rep"), $"doc_id")
-      .select(($"doc_id" * 64 + $"rep").as("doc_id"))
-      .withColumn("source", lit("hot"))
-      .withColumn("hk", graft.ops.LlmOps.knuthHash($"doc_id"))
-      .select($"source", $"doc_id", $"hk")
-  }
-
-  /** Hub-stress triangle workload shared by the x_tri probes: the kNN
-    * undirected edges plus a hub (id -1) adjacent to every vector. */
-  private def triHubWorkload(s: SparkSession, dir: String) = {
-    import org.apache.spark.sql.functions._
-    import s.implicits._
-    val knn = graft.ops.LlmOps.knnGraphBucketed(s, dir)
-      .select(least($"vec_id", $"nbr_id").as("lo"),
-        greatest($"vec_id", $"nbr_id").as("hi"))
-      .distinct()
-    val hub = Tables(s, dir, "embeddings")
-      .select(lit(-1L).as("lo"), $"vec_id".as("hi"))
-    Tables.truncate(knn.unionAll(hub))
-  }
-
-  /** Banded all-pairs set-array workload shared by the x_overlap
-    * probes. */
-  private def overlapWorkload(s: SparkSession, dir: String) = {
-    import org.apache.spark.sql.functions._
-    import s.implicits._
-    val sets = graft.ops.LlmOps.shingleDf(Tables(s, dir, "documents"))
-      .groupBy($"doc_id").agg(collect_list($"shingle").as("sh"))
-      .transform(Tables.truncate)
-    sets.select($"doc_id".as("ida"), $"sh".as("sa"))
-      .join(sets.select($"doc_id".as("idb"), $"sh".as("sb")),
-        $"idb" > $"ida" && $"idb" <= $"ida" + 10)
-  }
+        graft.ops.LlmOps.mineAnnPairs(s, dir)))
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val key = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // wide-catalog keys (300-col scan prune) legitimately exceed the
-      // 25-field default when anything stringifies their plan -- the
-      // resulting "Truncated the string representation" WARN was the
-      // last line keeping artifact tails from being WARN-free (r12)
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      // RocksDB state store: required by transformWithState (state API
-      // v2) and the production-grade choice regardless (off-heap,
-      // spill-capable state at scale)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quiet()
+    val spark = Session.local(32)
     try {
       val fn = adhoc.getOrElse(key, SparkEntry.queries(key))
-      // a probe builder may mutate session conf (x_overlap_builtin
-      // sets excludedRules — it must stay set through the reps, since
-      // optimization happens at count() time); snapshot here and
-      // restore after the reps so a future multi-probe runner on this
-      // session never inherits one probe's optimizer state
-      val prevExcluded =
-        spark.conf.getOption("spark.sql.optimizer.excludedRules")
-      try {
-        // formatted explain is pathologically slow on some plans with
-        // deeply-nested HOF lambdas through Generate (q_dedup_winnow
-        // hung here even at 100 rows while EXECUTING fine) — skippable
-        // so the timing protocol still works on those keys
-        if (!sys.env.contains("SPARK_GRAFT_NOEXPLAIN"))
-          fn(spark, sfDir).explain("formatted")
-        (1 to reps).foreach { i =>
-          val t0 = System.nanoTime()
-          val n = fn(spark, sfDir).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"rep $i: $sec%.3f s ($n rows)")
-          // same untimed per-rep release as Bench: otherwise a
-          // checkpoint-heavy query's reps accumulate retained blocks and
-          // later reps measure heap pressure, not the query
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          System.gc()
-        }
-      } finally prevExcluded match {
-        case Some(v) => spark.conf.set("spark.sql.optimizer.excludedRules", v)
-        case None => spark.conf.unset("spark.sql.optimizer.excludedRules")
+      // formatted explain is pathologically slow on some plans with
+      // deeply-nested HOF lambdas through Generate (q_dedup_winnow
+      // hung here even at 100 rows while EXECUTING fine) — skippable
+      // so the timing protocol still works on those keys
+      if (!sys.env.contains("SPARK_GRAFT_NOEXPLAIN"))
+        fn(spark, sfDir).explain("formatted")
+      (1 to reps).foreach { i =>
+        val t0 = System.nanoTime()
+        val n = fn(spark, sfDir).count()
+        val sec = (System.nanoTime() - t0) / 1e9
+        println(f"rep $i: $sec%.3f s ($n rows)")
+        // same untimed per-rep release as Bench: otherwise a
+        // checkpoint-heavy query's reps accumulate retained blocks and
+        // later reps measure heap pressure, not the query
+        Session.release(spark)
       }
     } finally spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** CLI analogue of the reference's `des-query` / `Connection.quickWrite`
   * [pub: desdb bin/des-query + desdb/desdb.py — SURVEY §0 grades]: run
@@ -18,24 +18,7 @@ object Query {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: Query <sfDir> <csv|json|pretty> <sql>")
     val (sfDir, fmt, sql) = (args(0), args(1), args.drop(2).mkString(" "))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // wide-catalog keys (300-col scan prune) legitimately exceed the
-      // 25-field default when anything stringifies their plan -- the
-      // resulting "Truncated the string representation" WARN was the
-      // last line keeping artifact tails from being WARN-free (r12)
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      // RocksDB state store: required by transformWithState (state API
-      // v2) and the production-grade choice regardless (off-heap,
-      // spill-capable state at scale)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = Session.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     Tables.registerViews(spark, sfDir)
     graft.functions.VectorExpressions.register(spark)

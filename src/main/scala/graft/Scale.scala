@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 
@@ -48,17 +47,8 @@ object ScaleGen {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val k = if (args.length > 1) args(1).toInt else 10
     val out = if (args.length > 2) args(2) else s"/tmp/graft_scale/x$k"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quiet()
+    val spark = Session.local(32)
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions").toInt
     import spark.implicits._
 
     val outPath = java.nio.file.Paths.get(out)
@@ -92,7 +82,7 @@ object ScaleGen {
               .otherwise(concat(t, lit("~"), $"r"))), " ")).as("text"),
         $"lang", $"source")
       .withColumn("n_chars", length($"text").cast("long"))
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
 
     // embeddings: deterministic per-replica ±1 isometry
@@ -104,7 +94,7 @@ object ScaleGen {
             when(pmod(hash($"r", i), lit(2)) === 0, x).otherwise(-x))
         ).cast("array<float>").as("embedding"),
         $"label")
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
     // events: id-offset replicas, identical per-user timelines
@@ -114,7 +104,7 @@ object ScaleGen {
         $"ts",
         ($"user_id" + $"r".cast("long") * IdStride).as("user_id"),
         $"event_type", $"value", $"props")
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$out/events.parquet")
 
     val counts = scaled.toSeq.sorted.map { t =>
@@ -228,12 +218,6 @@ object ScaleBench {
       "q_dedup_semantic_keep" -> Seq("q_dedup_semantic_keep"))).toMap
   }
 
-  private def release(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    System.gc()
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleBench <outJson> <label=dir>…")
     val outJson = args(0)
@@ -251,24 +235,14 @@ object ScaleBench {
         sel
       case None => ScaleBench.keys
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quiet()
+    val spark = Session.local(32)
 
     // JIT/codegen warmup on the smallest SF, untimed (Bench protocol)
     val w = "/root/testdata/sf0.001"
     keys.foreach { case (k, _) =>
       try { SparkEntry.queries(k)(spark, w).count() }
       catch { case NonFatal(_) => () }
-      release(spark)
+      Session.release(spark)
     }
 
     val perCorpus = corpora.map { case (label, dir) =>
@@ -285,7 +259,7 @@ object ScaleBench {
       triggers.foreach { k =>
         try { SparkEntry.queries(k)(spark, dir).count() }
         catch { case NonFatal(_) => () }
-        release(spark)
+        Session.release(spark)
       }
       val memoSec = (System.nanoTime() - m0) / 1e9
       // per-artifact decomposition of the memo chain at THIS corpus
@@ -307,7 +281,7 @@ object ScaleBench {
         val ok = try { SparkEntry.queries(k)(spark, dir).count(); true }
           catch { case NonFatal(_) => false }
         val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        release(spark)
+        Session.release(spark)
         println(f"# scalebench $label $k $sec%.2f s")
         (k, fam, sec)
       }
@@ -347,236 +321,6 @@ object ScaleBench {
     growth.foreach { case (k, fam, nr, tr, a) =>
       println(f"# growth $k%-28s $fam%-10s n_ratio=$nr%5.1f t_ratio=${tr}%7.2f alpha=${a}%5.2f")
     }
-    spark.stop()
-  }
-}
-
-/** Calibration probe for the ADAPTIVE containment-prefix screen
-  * (VERDICT r12 #1): prints the priced candidate-mass census of a
-  * corpus — per-df-level cumulative join-row mass, the generous-cap
-  * mass, and the cap the budget rule would choose for a grid of
-  * budgets — and (optionally, `counts` as arg 2) the DISTINCT
-  * candidate count the screened join actually emits at the chosen
-  * cap, so the priced-mass → verify-pairs ratio is measured, not
-  * assumed. Usage: runMain graft.CtpCalibrate <dir> [counts]
-  */
-object CtpCalibrate {
-  def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val withCounts = args.contains("counts")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quiet()
-    import spark.implicits._
-    import graft.ops.LlmOps
-
-    val docs0 = Tables(spark, dir, "documents")
-    val nDocs = docs0.count()
-    // rep view = the declared collapsed key's census; full view = the
-    // un-collapsed stage formulation (the x_ctp probes — the regime
-    // whose x30 mass round 12 measured at α 2.0)
-    val fullView = args.contains("full")
-    val (docs, repSh) = if (fullView) {
-      (docs0, Tables.truncate(LlmOps.shingleDf(docs0)))
-    } else {
-      val memb = LlmOps.dupGroups(docs0)
-      val reps = memb.filter($"rep_id" === $"doc_id").select($"doc_id")
-      (reps.toDF("doc_id"),
-        Tables.truncate(LlmOps.shingleDf(docs0).join(reps, "doc_id")))
-    }
-    val reps = docs.select($"doc_id")
-    val nReps = reps.count()
-    val genCap = math.max(64.0, nReps * 0.01)
-    println(f"# ctp view=${if (fullView) "full" else "rep"} " +
-      f"n_docs=$nDocs n_mined=$nReps gencap=$genCap%.1f")
-
-    val ranked = Tables.truncate(LlmOps.rankedShingles(repSh))
-    val census = LlmOps.ctpMassCensus(ranked)
-      .select($"f", $"m", $"cum_m").orderBy($"f")
-      .as[(Long, Long, Long)].collect()
-    println(s"# ctp levels=${census.length} " +
-      s"max_f=${census.lastOption.map(_._1).getOrElse(0L)} " +
-      s"total_mass=${census.lastOption.map(_._3).getOrElse(0L)}")
-    val genMass = census.takeWhile(_._1 <= genCap).lastOption
-      .map(_._3).getOrElse(0L)
-    println(f"# ctp mass_at_gencap=$genMass")
-    // the head of the spectrum (largest 12 levels) — where mass lives
-    census.takeRight(12).foreach { case (f, m, c) =>
-      println(s"# ctp level f=$f m=$m cum=$c")
-    }
-    val budgets = Seq(8L, 16L, 24L, 32L, 48L, 64L, 96L, 128L, 192L,
-      256L, 384L).map(_ * 1000000L)
-    val caps = budgets.map { b =>
-      val fit = census.takeWhile(_._3 <= b).lastOption.map(_._1)
-        .getOrElse(0L)
-      val cap = math.min(genCap, math.max(64.0, fit.toDouble))
-      val mass = census.takeWhile(_._1 <= cap).lastOption
-        .map(_._3).getOrElse(0L)
-      println(f"# ctp budget=$b fitcap=$fit cap=$cap%.1f mass_at_cap=$mass")
-      cap
-    }
-    if (withCounts) {
-      caps.distinct.foreach { cap =>
-        val t0 = System.nanoTime()
-        val n = LlmOps.containmentPrefixCandScreened(repSh, reps,
-            capFrac = cap / nReps.toDouble,
-            massBudget = Long.MaxValue)
-          .distinct().count()
-        println(f"# ctp cap=$cap%.1f distinct_candidates=$n " +
-          f"(${(System.nanoTime() - t0) / 1e9}%.1f s)")
-      }
-    }
-    spark.stop()
-  }
-}
-
-/** Wide-band ANN probe (VERDICT r12 #2): MEASURE the standing
-  * scaladoc claim that the banded sign-hash miner "re-parameterizes to
-  * wide bands at θ ≥ 0.9 where candidate mass collapses to
-  * ~n²/65536". The corpus has no ≥ 0.9 structure (the ≥ 0.4 pairs are
-  * a random tail at sim ≤ 0.51), so the probe PLANTS it: every 40th
-  * vector gets three perturbed twins at target cosines ≈ 0.99 / 0.96 /
-  * 0.90 (deterministic hash noise, unit-normalized so cosine = dot),
-  * then measures — against the BRUTE-FORCE ≥ 0.9 truth over the
-  * planted corpus — the candidate mass, wall time, and recall (overall
-  * and per cosine bin) of two wide-band shapes:
-  *   - 4 bands × 16 raw sign bits (the scaladoc's literal shape:
-  *     all 64 dims, random collision 2⁻¹⁶ per band);
-  *   - 32 bands × 12 random-projection bits (384 Rademacher
-  *     hyperplane bits from hash(j, dim) — collision 2⁻¹² per band,
-  *     recall 1-(1-p¹²)³² which stays ≥ 0.99 down to cos 0.9, the
-  *     shape the theory actually recommends at the θ = 0.9 BOUNDARY).
-  * Usage: runMain graft.AnnWideProbe <dir>
-  */
-object AnnWideProbe {
-  def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quiet()
-    import spark.implicits._
-    import org.apache.spark.sql.DataFrame
-
-    def unit(col: org.apache.spark.sql.Column) = {
-      val n = sqrt(aggregate(transform(col, x => x * x),
-        lit(0.0d), (acc, x) => acc + x))
-      transform(col, x => x / n)
-    }
-    val base = Tables(spark, dir, "embeddings")
-      .select($"vec_id", unit($"embedding".cast("array<double>")).as("u"))
-    // planted twins: u' = normalize(u + eps * ghat), ghat a unit
-    // deterministic-noise direction — cosine lands near 1/sqrt(1+eps²)
-    val tiers = Seq((1L, 0.15), (2L, 0.30), (3L, 0.48))
-    val planted = tiers.map { case (t, eps) =>
-      base.filter($"vec_id" % 40 === 0)
-        .select(($"vec_id" + t * 1000000000L).as("vec_id"),
-          unit(zip_with($"u",
-            unit(transform(sequence(lit(1), lit(64)), i =>
-              (pmod(hash($"vec_id", lit(t), i), lit(2001)) - lit(1000))
-                .cast("double") / 1000.0d)),
-            (x, g) => x + lit(eps) * g)).as("u"))
-    }.reduce(_ unionAll _)
-    val corpus = Tables.truncate(
-      base.unionAll(planted)
-        .select($"vec_id", $"u".cast("array<float>").as("u"))
-        .repartition(cpus.toInt))
-    val n = corpus.count()
-    println(s"# annwide corpus n=$n (base ${n - planted.count()})")
-
-    val dot = graft.functions.VectorExpressions.vecDot(spark) _
-    def cosPairs(cand: DataFrame): DataFrame = cand
-      .join(corpus.select($"vec_id".as("va"), $"u".as("ua"))
-        .hint("SHUFFLE_HASH"), "va")
-      .join(corpus.select($"vec_id".as("vb"), $"u".as("ub"))
-        .hint("SHUFFLE_HASH"), "vb")
-      .select($"va", $"vb", dot($"ua", $"ub").as("cos"))
-      .filter($"cos" >= 0.9)
-
-    // brute-force truth: broadcast one side, codegen dot on all pairs
-    val t0 = System.nanoTime()
-    val truth = Tables.truncate(
-      Tables.spread(corpus.select($"vec_id".as("va"), $"u".as("ua")))
-        .join(broadcast(corpus.select($"vec_id".as("vb"), $"u".as("ub"))),
-          $"va" < $"vb" && dot($"ua", $"ub") >= 0.9)
-        .select($"va", $"vb", dot($"ua", $"ub").as("cos")))
-    val truthRows = truth.select($"va", $"vb", $"cos")
-      .as[(Long, Long, Double)].collect()
-    println(f"# annwide truth pairs=${truthRows.length} " +
-      f"(${(System.nanoTime() - t0) / 1e9}%.1f s brute over ${n * (n - 1) / 2} cand)")
-    def bin(c: Double) =
-      if (c >= 0.99) "[0.99,1]" else if (c >= 0.95) "[0.95,0.99)" else "[0.90,0.95)"
-    val truthByBin = truthRows.groupBy(t => bin(t._3)).view.mapValues(_.length).toMap
-    truthByBin.toSeq.sorted.foreach { case (b, c) =>
-      println(s"# annwide truth bin $b n=$c") }
-
-    // shape (a): 4 bands × 16 raw sign bits over all 64 dims
-    val sig4x16 = expr(
-      """transform(sequence(0, 3), k ->
-        |  aggregate(sequence(1, 16), 0L,
-        |    (acc, i) -> acc * 2 +
-        |      IF(element_at(u, k * 16 + i) > 0, 1L, 0L)))""".stripMargin)
-    // shape (b): 32 bands × 12 Rademacher random-projection bits
-    val proj = expr(
-      """transform(sequence(0, 383), j ->
-        |  aggregate(sequence(1, 64), cast(0.0 as double),
-        |    (acc, i) -> acc + element_at(u, i) *
-        |      IF(pmod(hash(j, i), 2) = 0, 1.0D, -1.0D)))""".stripMargin)
-    val sig32x12 = expr(
-      """transform(sequence(0, 31), k ->
-        |  aggregate(sequence(1, 12), 0L,
-        |    (acc, i) -> acc * 2 +
-        |      IF(element_at(pj, k * 12 + i) > 0, 1L, 0L)))""".stripMargin)
-
-    def run(label: String, banded: DataFrame): Unit = {
-      val t1 = System.nanoTime()
-      val cand = Tables.truncate(
-        banded.select($"vec_id".as("va"), posexplode($"sig")
-            .as(Seq("band", "s")))
-          .join(banded.select($"vec_id".as("vb"), posexplode($"sig")
-            .as(Seq("band", "s"))), Seq("band", "s"))
-          .filter($"va" < $"vb").select($"va", $"vb").distinct())
-      val nCand = cand.count()
-      val found = cosPairs(cand).select($"va", $"vb", $"cos")
-        .as[(Long, Long, Double)].collect()
-      val sec = (System.nanoTime() - t1) / 1e9
-      val foundSet = found.map(t => (t._1, t._2)).toSet
-      val hitByBin = truthRows.filter(t => foundSet((t._1, t._2)))
-        .groupBy(t => bin(t._3)).view.mapValues(_.length).toMap
-      val recall =
-        if (truthRows.isEmpty) Double.NaN
-        else foundSet.intersect(truthRows.map(t => (t._1, t._2)).toSet).size
-          .toDouble / truthRows.length
-      println(f"# annwide $label cand=$nCand sec=$sec%.1f " +
-        f"recall=$recall%.4f (found ${found.length})")
-      truthByBin.toSeq.sorted.foreach { case (b, tot) =>
-        val hit = hitByBin.getOrElse(b, 0)
-        println(f"# annwide $label bin $b recall=${hit.toDouble / tot}%.4f ($hit/$tot)")
-      }
-    }
-    run("4x16", corpus.select($"vec_id", sig4x16.as("sig")))
-    // checkpoint the 384-bit projection column BEFORE slicing it into
-    // band signatures: Catalyst's collapse-projects would otherwise
-    // inline the full 384×64 aggregate into EVERY element_at of the
-    // signature expression — a 384× recompute measured as a wall-clock
-    // hang at x10
-    run("32x12", Tables.truncate(corpus.withColumn("pj", proj))
-      .select($"vec_id", sig32x12.as("sig")))
     spark.stop()
   }
 }

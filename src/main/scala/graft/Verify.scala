@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,26 +9,7 @@ object Verify {
     // passes two): comma-separated subset of keys to dump
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // wide-catalog keys (300-col scan prune) legitimately exceed the
-      // 25-field default when anything stringifies their plan -- the
-      // resulting "Truncated the string representation" WARN was the
-      // last line keeping artifact tails from being WARN-free (r12)
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      // RocksDB state store: required by transformWithState (state API
-      // v2) and the production-grade choice regardless (off-heap,
-      // spill-capable state at scale)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quiet()
+    val spark = Session.local(4)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -39,11 +19,9 @@ object Verify {
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // release this query's localCheckpoint blocks synchronously (same
-      // rationale as Bench.release): retained blocks otherwise build
-      // heap pressure through the 100-query dump run
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      // retained checkpoint blocks otherwise build heap pressure
+      // through the whole dump run
+      Session.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

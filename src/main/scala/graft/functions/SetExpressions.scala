@@ -18,9 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Implementation: open-addressing linear-probe table over the
   * SMALLER side (two flat arrays, zero per-element node allocations —
   * a `java.util.HashSet` variant measured ~25% SLOWER than the
-  * builtin here because every `add` allocates a Node; see the
-  * `x_overlap_*` Profile probes). Matches are marked in a parallel
-  * bitmap instead of removed (open addressing can't cheaply delete),
+  * builtin here because every `add` allocates a Node; the kernel vs
+  * builtin A/B is recorded in SCALE.md). Matches are marked in a
+  * parallel bitmap instead of removed (open addressing can't cheaply
+  * delete),
   * which preserves duplicate-counts-once semantics; the probe loop
   * early-exits once every distinct small-side element is matched. */
 object OverlapKernel extends Serializable {

@@ -106,9 +106,9 @@ object LlmOps {
     * exact-duplicate rescue; VERIFICATION is exact Jaccard over the
     * FULL shingle sets, so every emitted similarity is exact. The
     * uncapped single-pass formulation survives as
-    * [[dedupNgramJaccardFromShingles]] — the Profile blow-up probe and
-    * the recall-loss differential in OpsRound14Spec, not a declared
-    * key. */
+    * [[dedupNgramJaccardFromShingles]] — the recall-loss differential
+    * in OpsRound14Spec (its stop-shingle blow-up is measured in
+    * SCALE.md), not a declared key. */
   def dedupNgramJaccard(spark: SparkSession, sfDir: String): DataFrame =
     dedupNgramCappedFrom(shingleIndex(spark, sfDir),
       Tables(spark, sfDir, "documents"))
@@ -127,8 +127,8 @@ object LlmOps {
   /** Shingle inverted-index candidate pass — ONE self-join on shingle
     * (only docs SHARING a shingle ever pair), ordered pairs, common
     * count partial-agged map-side. Candidate mass is Σdf², so feed it
-    * the CAPPED stream ([[cappedShingles]]) unless the caller is a
-    * deliberate blow-up probe. */
+    * the CAPPED stream ([[cappedShingles]]) unless the caller is the
+    * uncapped referee ([[dedupNgramJaccardFromShingles]]). */
   private[graft] def shinglePairCounts(sh: DataFrame): DataFrame = {
     import sh.sparkSession.implicits._
     sh.select($"doc_id".as("doc_a"), $"shingle")
@@ -192,18 +192,18 @@ object LlmOps {
       .distinct()
   }
 
-  /** Core over an arbitrary documents relation — also driven by the
-    * Profile stop-shingle probes that measure this formulation's n²
-    * blow-up territory (see SCALE.md). */
+  /** Core over an arbitrary documents relation — the uncapped side of
+    * OpsRound14Spec's recall-loss differential. This formulation's n²
+    * blow-up on a stop-shingle corpus is measured in SCALE.md. */
   private[graft] def dedupNgramJaccardOn(docs: DataFrame): DataFrame =
     dedupNgramJaccardFromShingles(
       shingleDf(docs).transform(graft.Tables.truncate))
 
   /** The UNCAPPED single-pass formulation (the same join that
     * discovers a pair also counts its common shingles). Round-10:
-    * no longer any declared key's path — retained as the Profile
-    * blow-up probe and the recall-loss reference the capped default
-    * is differentially tested against (OpsRound14Spec). */
+    * no longer any declared key's path — retained as the recall-loss
+    * reference the capped default is differentially tested against
+    * (OpsRound14Spec). */
   private[graft] def dedupNgramJaccardFromShingles(sh: DataFrame): DataFrame = {
     val spark = sh.sparkSession
     import spark.implicits._
@@ -283,12 +283,6 @@ object LlmOps {
   def dedupJaccardPrefix(spark: SparkSession, sfDir: String): DataFrame =
     dedupJaccardPrefixCollapsed(shingleIndex(spark, sfDir),
       dupGroupsMemo(spark, sfDir))
-
-  /** Core over an arbitrary documents relation (see
-    * [[dedupNgramJaccardOn]] — same probe rationale). */
-  private[graft] def dedupJaccardPrefixOn(docs: DataFrame): DataFrame =
-    dedupJaccardPrefixCollapsed(
-      shingleDf(docs).transform(graft.Tables.truncate), dupGroups(docs))
 
   private def dedupJaccardPrefixCollapsed(sh: DataFrame,
       memb: DataFrame): DataFrame = {
@@ -456,7 +450,7 @@ object LlmOps {
     * admits the moment a longer corpus arrives. The exact relative
     * filter `dist ≤ 0.05·max(len)` then runs per pair.
     * Scale: the candidate pair stream is 16-byte id pairs deduped
-    * BEFORE texts join in (same discipline as [[dedupJaccardPrefixOn]]). */
+    * BEFORE texts join in (same discipline as [[dedupJaccardPrefix]]). */
   def dedupEdit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables(spark, sfDir, "documents")
@@ -527,8 +521,9 @@ object LlmOps {
     * — measured x10 → x30: 24.1M → 217M candidate pairs (α 2.0),
     * whose verify shuffle (~1.5 KB of set arrays per pair) exceeds a
     * single node's disk at x30. The corpus-independent control is the
-    * FLAT cap (the `x_ctp_key_cap64` Profile probe: 7.0 s at x30,
-    * 97.8% of the lossless pair set at x10 — it loses exactly the
+    * FLAT cap (the screened key at a flat df cap of 64, measured in
+    * SCALE.md: 7.0 s at x30, 97.8% of the lossless pair set at x10 —
+    * it loses exactly the
     * >64-host popular fragments the generous screen exists to keep),
     * and the 0.1%-cap miner ([[dedupContainment]], α ≈ 1.0 at x30) is
     * the declared scale rung. Pick the screen when the popularity
@@ -665,9 +660,10 @@ object LlmOps {
       .agg(coalesce(max($"f"), lit(0L)).cast("double").as("fitcap"))
   }
 
-  /** Screened candidate stage only (Profile stage probes). The cap
-    * parameters exist for the Profile cap-shape probes; the declared
-    * key always runs the defaults.
+  /** Screened candidate stage of [[dedupContainmentPrefixScreened]].
+    * The cap parameters exist for OpsRound19Spec, which drives the
+    * budget walk at explicit floors and budgets; the declared key
+    * always runs the defaults.
     *
     * Round 13 (VERDICT r12 #1): the screen threshold is ADAPTIVE —
     * `maxdf = least(gencap, greatest(floor, fitcap))` where gencap is
@@ -748,7 +744,7 @@ object LlmOps {
     verifyContainment(containmentPrefixCandLossless(sh).distinct(), sh)
       .orderBy(col("doc_a"), col("doc_b"))
 
-  /** Lossless candidate stage only (Profile stage probes). */
+  /** Lossless candidate stage of [[dedupContainmentPrefixLossless]]. */
   private[graft] def containmentPrefixCandLossless(sh: DataFrame): DataFrame = {
     val spark = sh.sparkSession
     import spark.implicits._
@@ -1043,8 +1039,8 @@ object LlmOps {
     * threshold is information-theoretically expensive for ANY index.
     * In the production semantic-dedup regime (θ ≥ 0.9, SemDeDup-style)
     * the same operator re-parameterizes to wide bands — MEASURED in
-    * round 13 (`graft.AnnWideProbe`, planted ≥ 0.9 tiers on the x10
-    * corpus, brute-force referee; SCALE.md): the 4×16-bit shape this
+    * round 13 (planted ≥ 0.9 tiers on the x10 corpus, brute-force
+    * referee; recorded in SCALE.md): the 4×16-bit shape this
     * scaladoc used to recommend delivers the claimed mass collapse
     * (15.8k candidates ≈ 4·n²/2¹⁶/... vs 231M brute pairs) but only
     * 0.58 recall at θ = 0.9 (0.37 in the [0.90, 0.95) boundary bin —
@@ -1723,7 +1719,8 @@ object LlmOps {
 
   /** Degree-ordered triangle counting over an undirected, deduped
     * edge list `(lo, hi)` with lo < hi — the core [[graphTriangles]]
-    * runs on the kNN graph and the Profile hub-stress A/B reuses. */
+    * and [[graphClustering]] run on the kNN graph (the hub-stress
+    * orientation A/B is recorded in SCALE.md). */
   private[graft] def triangleCountOn(und: DataFrame): DataFrame = {
     import und.sparkSession.implicits._
     val deg = und.select(explode(array($"lo", $"hi")).as("node"))
@@ -2864,7 +2861,7 @@ object LlmOps {
   }
 
   /** The deterministic Knuth multiplicative hash order key shared by
-    * the cap query and its Profile skew probes. The multiply runs in
+    * the cap, shuffle and balanced-sample keys. The multiply runs in
     * decimal(38,0) — exact for any bigint id — because the plain
     * 64-bit product wraps for id > ~3.47e9 where Spark would wrap
     * silently while DuckDB raises a BIGINT overflow (the oracle twin
@@ -2875,9 +2872,8 @@ object LlmOps {
       .cast("bigint")
 
   /** Bounded-heap per-source cap core over a (source, doc_id, hk)
-    * relation → (source, doc_id, rk ≤ k): one definition serving the
-    * declared key AND the x_cap skew probes, so the A/B always
-    * measures the shipped formulation. */
+    * relation → (source, doc_id, rk ≤ k); its skew A/B against the
+    * rank-window formulation is recorded in SCALE.md. */
   private[graft] def capHeapOn(df: DataFrame, k: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._

@@ -34,8 +34,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Harness files (measurement/CLI, not engine dataflow) are exempt by
   * name: Omits (omit measurements), Query (CLI printer, limit-bounded),
-  * Verify/Bench/Profile/Scale (driver-contract harnesses). The oracle
-  * twins (graft/oracle) contain SQL strings, not Spark calls.
+  * Scale (ScaleGen's 100-row head-token collect). The oracle twins
+  * (graft/oracle) contain SQL strings, not Spark calls.
+  *
+  * Session policy: every main builds its session through
+  * `Session.local`, so `SparkSession.builder()` appears in `src/main`
+  * only in Session.scala — a second builder is a copy of the policy
+  * that drifts from it.
   */
 class LintSpec extends AnyFunSuite {
 
@@ -69,9 +74,7 @@ class LintSpec extends AnyFunSuite {
     ("Eval.scala", "simRerankMmr") -> 1,
     ("Sources.scala", "deleteCompact") -> 1)
 
-  private val harnessExempt = Set(
-    "Omits.scala", "Query.scala", "Verify.scala", "Bench.scala",
-    "Profile.scala", "Scale.scala")
+  private val harnessExempt = Set("Omits.scala", "Query.scala", "Scale.scala")
 
   // .rdd.collect / collectPartitions cover the RDD-level driver
   // primitives the pre-r11 lint banned outright (ADVICE r11: the
@@ -130,5 +133,20 @@ class LintSpec extends AnyFunSuite {
     assert(stale.isEmpty,
       "stale whitelist entries (site removed or enclosing def renamed):\n" +
         stale.mkString("\n"))
+  }
+
+  test("SparkSession.builder() appears in src/main only in Session.scala") {
+    val sites = scalaFiles(new java.io.File("src/main")).flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f.toPath)
+      (0 until lines.size()).collect {
+        case i if lines.get(i).contains("SparkSession.builder()") =>
+          s"${f.getPath}:${i + 1}"
+      }
+    }
+    val outside = sites.filterNot(_.contains("/Session.scala:"))
+    assert(outside.isEmpty,
+      "build sessions through Session.local, not a new builder:\n" +
+        outside.mkString("\n"))
+    assert(sites.nonEmpty, "Session.scala no longer builds the session")
   }
 }
