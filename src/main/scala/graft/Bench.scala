@@ -28,6 +28,7 @@ object Bench {
       // r14: the screened containment miner's priced-mass census is a
       // maintained corpus artifact (ctp-census; VERDICT r13 #2)
       "q_dedup_containment_prefix")
+    val memoBuilds = graft.ops.Memo.trackBuilds()
     val w0 = System.nanoTime()
     memoTriggers.foreach { k =>
       SparkEntry.queries.get(k).foreach { fn =>
@@ -117,17 +118,11 @@ object Bench {
     println(f"# memo warmup (shared-artifact materialization, untimed" +
       f" in per-key numbers) $memoSec%.1f s")
     // per-artifact decomposition of the warmup chain (VERDICT r11 #7):
-    // only artifacts whose BUILD ran in this JVM at the TARGET sf (the
-    // sf0.001 JIT pass built its own tiny copies, keyed separately)
-    import scala.jdk.CollectionConverters._
-    // exact dir match on the '@'-split key, not endsWith — a corpus
-    // path that is a path-suffix of another used in the same JVM would
-    // attribute builds to both (ADVICE r12 #2)
-    graft.ops.Memo.buildSeconds.asScala.toSeq
-      .filter(_._1.split("@", 2).lift(1).contains(sfDir)).sortBy(-_._2)
-      .foreach { case (k, v) =>
-        println(f"# memo build ${k.takeWhile(_ != '@')} $v%.2f s")
-      }
+    // only the builds the memo phase itself ran (the sf0.001 JIT pass's
+    // builds are not reported, even when the target sf IS sf0.001)
+    memoBuilds().foreach { case (kind, v) =>
+      println(f"# memo build $kind $v%.2f s")
+    }
     if (failed.nonEmpty) println(s"# failed: ${failed.mkString(" ")}")
     // successes only: failures carry the -1 sentinel and would otherwise
     // surface as negative-second "slow" entries when many queries fail

@@ -1,7 +1,7 @@
 package graft
 
 /** Log hygiene for the mains, installed by [[Session.local]]: their
-  * per-query [[Session.release]] unpersists locally-checkpointed RDDs,
+  * per-query [[Session.unpersistAll]] unpersists locally-checkpointed RDDs,
   * and `org.apache.spark.rdd.RDD` WARNs "RDD N was
   * locally checkpointed, its lineage has been truncated and cannot be
   * recomputed after unpersisting" once per block — hundreds of lines

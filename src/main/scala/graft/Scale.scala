@@ -248,6 +248,7 @@ object ScaleBench {
     val perCorpus = corpora.map { case (label, dir) =>
       val nRows = Seq("documents", "embeddings", "events")
         .map(t => t -> Tables(spark, dir, t).count()).toMap
+      val memoBuilds = graft.ops.Memo.trackBuilds()
       val m0 = System.nanoTime()
       // under a key filter, warm exactly the artifact chains the
       // selected keys CONSUME (keyChains) — a filtered miner probe
@@ -263,18 +264,10 @@ object ScaleBench {
       }
       val memoSec = (System.nanoTime() - m0) / 1e9
       // per-artifact decomposition of the memo chain at THIS corpus
-      // (VERDICT r11 #7) — builds only, cache hits record nothing
-      locally {
-        import scala.jdk.CollectionConverters._
-        // exact dir match on the '@'-split key, not endsWith — a
-        // corpus path that is a path-suffix of another in the same JVM
-        // would attribute builds to both (ADVICE r12 #2)
-        graft.ops.Memo.buildSeconds.asScala.toSeq
-          .filter(_._1.split("@", 2).lift(1).contains(dir)).sortBy(-_._2)
-          .foreach { case (k, v) =>
-            println(
-              f"# scalebench $label memo build ${k.takeWhile(_ != '@')} $v%.2f s")
-          }
+      // (VERDICT r11 #7) — this phase's builds only, cache hits record
+      // nothing, and the warmup's builds are not this corpus's
+      memoBuilds().foreach { case (kind, v) =>
+        println(f"# scalebench $label memo build $kind $v%.2f s")
       }
       val times = keys.map { case (k, fam) =>
         val t0 = System.nanoTime()

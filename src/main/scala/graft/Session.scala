@@ -45,20 +45,26 @@ object Session {
   }
 
   /** Drop every persisted block NOW, synchronously on the driver.
-    * localCheckpoint blocks are only reclaimed when a GC notices the
-    * RDD object is unreachable AND the async ContextCleaner gets
-    * around to it; across a 99-query session the un-collected blocks
-    * become exactly the heap pressure that inflated the round-2 Bench
-    * total 1.42× on unchanged queries (VERDICT r2). A query boundary
-    * is a safe point: no declared query reuses another's checkpointed
-    * intermediates (the Tables plan cache holds parquet scan plans
-    * only, never checkpoints). */
-  def release(spark: SparkSession): Unit = {
+    * localCheckpoint blocks are otherwise only reclaimed when a GC
+    * notices the RDD object is unreachable AND the async ContextCleaner
+    * gets around to it. A query boundary is a safe point: no declared
+    * query reuses another's checkpointed intermediates (the Tables plan
+    * cache holds parquet scan plans only, never checkpoints). */
+  def unpersistAll(spark: SparkSession): Unit =
     // blocking = true: the async form only enqueues RemoveRdd, so the
     // next query's timed region could still be paying this query's
     // eviction; callers run this in an untimed gap, where waiting is free
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
+
+  /** [[unpersistAll]], then a full GC — the gap between two TIMED
+    * queries (Bench, Profile, ScaleBench): across a 99-query session
+    * the un-collected blocks become exactly the heap pressure that
+    * inflated the round-2 Bench total 1.42× on unchanged queries
+    * (VERDICT r2). An untimed dump (Verify) unpersists only: the
+    * collection buys it nothing but wall time. */
+  def release(spark: SparkSession): Unit = {
+    unpersistAll(spark)
     System.gc()
   }
 }

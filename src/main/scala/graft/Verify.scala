@@ -21,7 +21,7 @@ object Verify {
       }
       // retained checkpoint blocks otherwise build heap pressure
       // through the whole dump run
-      Session.release(spark)
+      Session.unpersistAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

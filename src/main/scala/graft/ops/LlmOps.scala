@@ -44,28 +44,6 @@ object LlmOps {
           |       i -> array_join(slice(toks, i, 3), ' '))
           |  ELSE array() END""".stripMargin + ")")).as("shingle"))
 
-  /** Exact overlap census over FULL shingle sets for a given candidate
-    * pair set: (doc_a, doc_b, common, na, nb) — candidates join the
-    * inverted index, never n². Round 12: NO declared key verifies
-    * through this any more (VERDICT r11 #1) — the explode mass (Σ|A|
-    * shingle rows re-shuffled and re-aggregated per candidate) made
-    * the capped miners the three slowest x10 sweep keys while the
-    * hashed-set kernel ([[overlapVerify]]) counts the same overlaps in
-    * seconds. Retained as the string-exact REFERENCE shape the
-    * OpsRound3Spec collision probes compare the hashed kernel against. */
-  private[graft] def overlapFor(candidates: DataFrame, sh: DataFrame): DataFrame = {
-    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val a = sh.select(col("doc_id").as("doc_a"), col("shingle"))
-    val b = sh.select(col("doc_id").as("doc_b"), col("shingle"))
-    candidates
-      .join(a, "doc_a").join(b, Seq("doc_b", "shingle"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("common"))
-      .join(sz.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("n_sh", "na"), "doc_a")
-      .join(sz.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("n_sh", "nb"), "doc_b")
-  }
-
   // ---- dedup family ------------------------------------------------------
 
   /** Exact dedup: canonical (min) doc_id per identical text. groupBy,
@@ -97,21 +75,73 @@ object LlmOps {
       .orderBy($"user_id", $"event_type")
   }
 
-  /** Near-dup pairs by exact n-gram Jaccard ≥ 0.6. Round-10: the
-    * MAXDF-capped candidate path ([[dedupNgramCappedFrom]]) is now the
-    * DEFAULT for this key — the round-9 x10 measurement showed the
-    * uncapped inverted-index self-join's candidate mass (Σdf²) growing
-    * superlinearly (tail α 2.31), i.e. the uncapped shape does not
-    * finish at 100 TB. Candidates come from cap-kept shingles plus the
+  /** An exact set-similarity threshold `sim ≥ p/q` — the ONE place each
+    * exact miner's threshold is written. Over the columns a verify row
+    * carries (`common`, `na`, `nb`) the ratio is common / d with
+    * d = `base` − k·common: |A∪B| = na + nb − common for Jaccard (k = 1),
+    * min(|A|,|B|) for containment (k = 0). All of it is exact integer
+    * arithmetic (round-12 discipline, replayed by the DuckDB twins): the
+    * pair filter `q·c ≥ p·d`, written `(q + p·k)·c ≥ p·base` so the
+    * overlap kernel is referenced once in the pushed-down join
+    * condition, the HALF_UP-quantized emission
+    * `round(10⁴·c/d) = (2·10⁴·c + d) div 2d` (presentation divide by
+    * 10⁴), and the prefix bound `n − ceil(p·n/q) + 1`. The integer
+    * filter is what makes the prefix candidate rules provably lossless:
+    * `q·c ≥ p·m ⟺ c ≥ ceil(p·m/q)` for integer c, so no rounding admits
+    * a pair the prefix rule could not have generated (the previous
+    * `r4(c/m) ≥ 0.7` admitted true containment down to 0.69995, and the
+    * integer quantization removes the per-pair decimal-half-tie
+    * divergence class the calibration key hit at x10). */
+  private[graft] final case class Measure(name: String, p: Int, q: Int,
+      base: String, k: Int) {
+    require(k == 0 || k == 1)
+    private val d = if (k == 0) base else s"$base - common"
+    /** The pair filter over a verify row. */
+    def keep: Column = expr(s"${q + p * k}L * common >= ${p}L * ($base)")
+    /** The emitted similarity, named after the measure. */
+    def value: Column =
+      (expr(s"(20000L * common + ($d)) div (2L * ($d))") / 10000.0).as(name)
+    /** ceil(p·n/q) of the long column `n`, exactly. */
+    def ceilT(n: String): Column = expr(s"(${p}L * $n + ${q - 1}L) div ${q}L")
+    /** Prefix length n − ceil(p·n/q) + 1 of a set of size `n`. */
+    def prefix(n: String): Column = col(n) - ceilT(n) + 1
+  }
+
+  /** J = |A∩B| / |A∪B| ≥ 3/5. */
+  private[graft] val Jaccard = Measure("jaccard", 3, 5, "na + nb", 1)
+  /** C = |A∩B| / min(|A|,|B|) ≥ 7/10. */
+  private[graft] val Containment =
+    Measure("containment", 7, 10, "least(na, nb)", 0)
+
+  /** Near-dup pairs by exact n-gram Jaccard ≥ 0.6 — the body of both
+    * `q_dedup_ngram_jaccard` and `q_dedup_ngram_capped`. Round-10: the
+    * MAXDF-capped candidate path ([[cappedCandidates]]) is the DEFAULT
+    * — the round-9 x10 measurement showed the uncapped inverted-index
+    * self-join's candidate mass (Σdf²) growing superlinearly (tail
+    * α 2.31), i.e. the uncapped shape does not finish at 100 TB
+    * (SCALE.md "Measured scale growth": HEAD-shingle df grows with the
+    * corpus). Since then the two keys coincide by construction; the
+    * capped one stays declared as the explicitly-named rung the
+    * mitigation history and the OpsRound14Spec adversarial probes hang
+    * off. Candidates come from cap-kept shingles plus the
     * exact-duplicate rescue; VERIFICATION is exact Jaccard over the
-    * FULL shingle sets, so every emitted similarity is exact. The
-    * uncapped single-pass formulation survives as
-    * [[dedupNgramJaccardFromShingles]] — the recall-loss differential
-    * in OpsRound14Spec (its stop-shingle blow-up is measured in
-    * SCALE.md), not a declared key. */
+    * FULL shingle sets, so every emitted similarity is exact, and the
+    * DuckDB oracle implements the SAME capped candidate rule, so both
+    * keys are hash-verified, not rows-only. The uncapped single-pass
+    * formulation is the recall-loss referee in `Referees` (src/test),
+    * not a declared key. */
   def dedupNgramJaccard(spark: SparkSession, sfDir: String): DataFrame =
-    dedupNgramCappedFrom(shingleIndex(spark, sfDir),
+    cappedJaccard(shingleIndex(spark, sfDir),
       Tables(spark, sfDir, "documents"))
+      .orderBy(col("doc_a"), col("doc_b"))
+
+  /** The capped pair path's UNSORTED core — the pair report's rows and
+    * [[clusterLabels]]' edges. Round-12 (VERDICT r11 #1): verification
+    * rides the hashed-set SHUFFLE_HASH kernel ([[verify]]), not an
+    * exploded index join — the identical change measured 540 s →
+    * seconds on the prefix keys. */
+  private[graft] def cappedJaccard(sh: DataFrame, docs: DataFrame): DataFrame =
+    verify(Jaccard, cappedCandidates(sh, docs), sh)
 
   /** The MEMOIZED full-corpus shingle inverted index — computed once
     * per (session, corpus) and materialized to parquet ([[Memo]]);
@@ -124,18 +154,22 @@ object LlmOps {
       shingleDf(Tables(spark, sfDir, "documents"))
     }
 
-  /** Shingle inverted-index candidate pass — ONE self-join on shingle
-    * (only docs SHARING a shingle ever pair), ordered pairs, common
+  /** Every unordered pair (doc_a < doc_b) of docs sharing the `keys`
+    * values of a (doc_id, keys…) relation: ONE equi self-join, so only
+    * docs sharing a key ever pair — the candidate shape of every
+    * inverted-index miner here. Output: keys…, doc_a, doc_b. */
+  private def selfPairs(df: DataFrame, keys: String*): DataFrame = {
+    def side(id: String) = df.select(col("doc_id").as(id) +: keys.map(col): _*)
+    side("doc_a").join(side("doc_b"), keys).filter(col("doc_a") < col("doc_b"))
+  }
+
+  /** Shingle inverted-index candidate pass — ordered pairs, common
     * count partial-agged map-side. Candidate mass is Σdf², so feed it
     * the CAPPED stream ([[cappedShingles]]) unless the caller is the
-    * uncapped referee ([[dedupNgramJaccardFromShingles]]). */
-  private[graft] def shinglePairCounts(sh: DataFrame): DataFrame = {
-    import sh.sparkSession.implicits._
-    sh.select($"doc_id".as("doc_a"), $"shingle")
-      .join(sh.select($"doc_id".as("doc_b"), $"shingle"), "shingle")
-      .filter($"doc_a" < $"doc_b")
-      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("common"))
-  }
+    * uncapped referee (`Referees`, src/test). */
+  private[graft] def shinglePairCounts(sh: DataFrame): DataFrame =
+    selfPairs(sh, "shingle")
+      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("common"))
 
   /** The MAXDF-capped shingle stream — the DEFAULT candidate source of
     * every exact near-dup miner since round 10: shingles whose df
@@ -164,14 +198,9 @@ object LlmOps {
     * cardinality anyway. Joining on xxhash64(text) keeps full texts
     * off the shuffle; a hash collision only adds a false CANDIDATE,
     * which exact verification then rejects. */
-  private[graft] def exactDupCandidates(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    val h = docs.select($"doc_id", xxhash64($"text").as("h"))
-    h.select($"doc_id".as("doc_a"), $"h")
-      .join(h.select($"doc_id".as("doc_b"), $"h"), "h")
-      .filter($"doc_a" < $"doc_b")
-      .select($"doc_a", $"doc_b")
-  }
+  private[graft] def exactDupCandidates(docs: DataFrame): DataFrame =
+    selfPairs(docs.select(col("doc_id"), xxhash64(col("text")).as("h")), "h")
+      .select(col("doc_a"), col("doc_b"))
 
   /** The round-10 default candidate set for exact near-dup mining:
     * cap-kept shingle co-occurrence ∪ exact-duplicate rescue,
@@ -181,76 +210,11 @@ object LlmOps {
     * such pairs do not occur in practice (OpsRound14Spec measures
     * zero recall loss on the corpus; the adversarial construction
     * that loses them is in the same spec, deliberately). */
-  private[graft] def cappedCandidates(sh: DataFrame, docs: DataFrame): DataFrame = {
-    import sh.sparkSession.implicits._
-    val kept = cappedShingles(sh, docs)
-    kept.select($"doc_id".as("doc_a"), $"shingle")
-      .join(kept.select($"doc_id".as("doc_b"), $"shingle"), "shingle")
-      .filter($"doc_a" < $"doc_b")
-      .select($"doc_a", $"doc_b")
+  private[graft] def cappedCandidates(sh: DataFrame, docs: DataFrame): DataFrame =
+    selfPairs(cappedShingles(sh, docs), "shingle")
+      .select(col("doc_a"), col("doc_b"))
       .unionAll(exactDupCandidates(docs))
       .distinct()
-  }
-
-  /** Core over an arbitrary documents relation — the uncapped side of
-    * OpsRound14Spec's recall-loss differential. This formulation's n²
-    * blow-up on a stop-shingle corpus is measured in SCALE.md. */
-  private[graft] def dedupNgramJaccardOn(docs: DataFrame): DataFrame =
-    dedupNgramJaccardFromShingles(
-      shingleDf(docs).transform(graft.Tables.truncate))
-
-  /** The UNCAPPED single-pass formulation (the same join that
-    * discovers a pair also counts its common shingles). Round-10:
-    * no longer any declared key's path — retained as the recall-loss
-    * reference the capped default is differentially tested against
-    * (OpsRound14Spec). */
-  private[graft] def dedupNgramJaccardFromShingles(sh: DataFrame): DataFrame = {
-    val spark = sh.sparkSession
-    import spark.implicits._
-    val sz = sh.groupBy($"doc_id").agg(count(lit(1)).as("n_sh"))
-    // same round-12 exact-integer threshold + quantization as
-    // [[verifyJaccard]], so the capped-vs-uncapped recall differentials
-    // (OpsRound14Spec) stay value-identical on shared pairs
-    shinglePairCounts(sh)
-      .join(sz.select($"doc_id".as("doc_a"), $"n_sh".as("na")), "doc_a")
-      .join(sz.select($"doc_id".as("doc_b"), $"n_sh".as("nb")), "doc_b")
-      .filter(expr("8L * common >= 3L * (na + nb)"))
-      .select($"doc_a", $"doc_b",
-        (expr("(20000L * common + (na + nb - common))" +
-          " div (2L * (na + nb - common))") / 10000.0).as("jaccard"))
-      .orderBy($"doc_a", $"doc_b")
-  }
-
-  /** MAXDF-capped inverted-index near-dup mine — the stop-shingle rung
-    * the round-9 scale measurement motivated (SCALE.md "Measured scale
-    * growth": the exact miners grow superlinearly because candidate
-    * mass is Σdf² and HEAD-shingle df grows with the corpus). Since
-    * round 10 this capped rule IS the default candidate path of every
-    * exact miner ([[cappedCandidates]]), so this key and
-    * `q_dedup_ngram_jaccard` coincide by construction — this one stays
-    * declared as the explicitly-named rung the mitigation history and
-    * the OpsRound14Spec adversarial probes hang off. Verification
-    * computes exact Jaccard over the FULL shingle sets; the DuckDB
-    * oracle implements the SAME capped candidate rule, so the key is
-    * hash-verified, not rows-only. */
-  def dedupNgramCapped(spark: SparkSession, sfDir: String): DataFrame =
-    dedupNgramCappedFrom(shingleIndex(spark, sfDir),
-      Tables(spark, sfDir, "documents"))
-
-  /** Core over an arbitrary corpus — driven by the OpsRound14Spec
-    * head-shingle probes. */
-  private[graft] def dedupNgramCappedOn(docs: DataFrame): DataFrame =
-    dedupNgramCappedFrom(
-      shingleDf(docs).transform(graft.Tables.truncate), docs)
-
-  private def dedupNgramCappedFrom(sh: DataFrame, docs: DataFrame): DataFrame = {
-    import sh.sparkSession.implicits._
-    // round-12 (VERDICT r11 #1): verification rides the hashed-set
-    // SHUFFLE_HASH kernel, not overlapFor's exploded index join — the
-    // identical change measured 540 s → seconds on the prefix keys
-    verifyJaccard(cappedCandidates(sh, docs), sh)
-      .orderBy($"doc_a", $"doc_b")
-  }
 
   /** The same exact-Jaccard near-dup pairs through a PREFIX-FILTERED
     * set-similarity join (the PPJoin-family candidate rule): under any
@@ -262,36 +226,42 @@ object LlmOps {
     * (every pair of docs sharing "of the and") simply never happens.
     *
     * Verification is linear in candidates: each candidate pair joins
-    * the two docs' full shingle SETS (one broadcast array row per doc)
-    * and counts the intersection per row — no second quadratic join.
+    * the two docs' full shingle SETS (one array row per doc) and
+    * counts the intersection per row — no second quadratic join.
     * On THIS corpus (max shingle frequency ≈ 25) the single-pass
     * [[dedupNgramJaccard]] is faster; at web scale, where stop-shingle
     * frequency grows with corpus size, this is the shape that survives
     * — candidate count tracks true-near-dup density, not corpus².
     *
     * Round 12: the declared key mines over ONE REPRESENTATIVE per
-    * distinct text and expands afterwards ([[dupGroups]] /
-    * [[expandDupPairs]] — provably lossless), because the x30 probe
-    * showed exact-duplicate GROUPS are the prefix joins' real scale
-    * enemy: G identical docs put identical prefixes in the index, so
-    * every shared prefix shingle pairs G×G ways and candidate mass
-    * rides the corpus's duplication rate squared (at x30 the verify
-    * shuffle of those candidates out-spilled a node's disk). Collapsed,
-    * candidate mass depends only on DISTINCT-text density, and the
-    * duplication rate returns where it belongs — in the output-bounded
-    * expansion. */
+    * distinct text and expands afterwards ([[mineCollapsed]] — provably
+    * lossless), because the x30 probe showed exact-duplicate GROUPS are
+    * the prefix joins' real scale enemy: G identical docs put identical
+    * prefixes in the index, so every shared prefix shingle pairs G×G
+    * ways and candidate mass rides the corpus's duplication rate
+    * squared (at x30 the verify shuffle of those candidates out-spilled
+    * a node's disk). Collapsed, candidate mass depends only on
+    * DISTINCT-text density, and the duplication rate returns where it
+    * belongs — in the output-bounded expansion. */
   def dedupJaccardPrefix(spark: SparkSession, sfDir: String): DataFrame =
-    dedupJaccardPrefixCollapsed(shingleIndex(spark, sfDir),
-      dupGroupsMemo(spark, sfDir))
+    mineCollapsed(shingleIndex(spark, sfDir), dupGroupsMemo(spark, sfDir),
+      Jaccard)((repSh, _) => jaccardPrefixCand(repSh))
 
-  private def dedupJaccardPrefixCollapsed(sh: DataFrame,
-      memb: DataFrame): DataFrame = {
-    import sh.sparkSession.implicits._
-    val repSh = sh.join(memb.filter($"rep_id" === $"doc_id")
-      .select($"doc_id"), "doc_id")
-    expandDupPairs(dedupJaccardPrefixFromShingles(repSh), memb, repSh,
-      "jaccard")
-      .orderBy($"doc_a", $"doc_b")
+  /** The collapse-then-expand shape both prefix miners share: mine
+    * `m` over ONE representative per distinct text — `cand(repSh,
+    * reps)` proposes (doc_a, doc_b) pairs over the rep-shingle index,
+    * deduped BEFORE the set-verify joins (a pair sharing k prefix
+    * shingles is proposed k times; driver bench r2: 51.6 s with a late
+    * distinct vs ~4 s — shuffling duplicates through two joins was the
+    * gap) — then expand the verified rep pairs over the dup groups
+    * `memb` ([[expandDupPairs]]) and sort once. */
+  private def mineCollapsed(sh: DataFrame, memb: DataFrame, m: Measure)
+      (cand: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val reps = memb.filter(col("rep_id") === col("doc_id")).select(col("doc_id"))
+    val repSh = sh.join(reps, "doc_id")
+    expandDupPairs(verify(m, cand(repSh, reps).distinct(), repSh), memb,
+      repSh, m.name)
+      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Exact-duplicate GROUPS for the collapse-then-expand miners:
@@ -351,50 +321,22 @@ object LlmOps {
     cross.unionAll(within)
   }
 
-  /** Same pass over a prebuilt (doc_id, shingle) index relation. */
-  private[graft] def dedupJaccardPrefixFromShingles(sh: DataFrame): DataFrame = {
-    val spark = sh.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val freq = sh.groupBy($"shingle").agg(count(lit(1)).as("f"))
-    val wDoc = Window.partitionBy($"doc_id")
-    // the global prefix order is (frequency, shingle HASH): any single
-    // consistent total order satisfies the candidate rule, and 8-byte
-    // longs sort and join far cheaper than shingle strings -- exact
-    // verification below makes the result independent of the order.
-    // n_sh comes from a second Window over the SAME doc_id partitioning
-    // (one exchange feeds both window operators) — NOT a broadcast of
-    // the per-doc sizes, which is an O(corpus)-row structure and would
-    // violate the no-unbounded-driver-payload posture at scale
-    val prefix = sh.join(freq, "shingle")
-      .withColumn("h", xxhash64($"shingle"))
-      .withColumn("rn", row_number().over(wDoc.orderBy($"f", $"h")))
-      .withColumn("n_sh", count(lit(1)).over(wDoc))
-      .filter($"rn" <= $"n_sh" - ceil($"n_sh" * 0.6) + 1)
+  /** Jaccard prefix candidates over a (doc_id, shingle) index: the
+    * PPJoin prefix rule over [[rankedShingles]]' global order plus the
+    * PPJoin LENGTH filter — J ≥ t also bounds the set sizes to
+    * t·|A| ≤ |B| ≤ |A|/t, killing most false candidates before the
+    * distinct and the verification stage ever see them. */
+  private def jaccardPrefixCand(sh: DataFrame): DataFrame = {
+    import sh.sparkSession.implicits._
+    val prefix = rankedShingles(sh)
+      .filter($"rn" <= Jaccard.prefix("n_sh"))
       .select($"doc_id", $"h", $"n_sh")
-    // candidate rule + PPJoin LENGTH filter: J >= t also bounds the
-    // set sizes to t·|A| <= |B| <= |A|/t, killing most false candidates
-    // before the distinct and the verification stage ever see them.
-    // A pair sharing k prefix shingles appears k times here; dedup the
-    // 16-byte (doc_a, doc_b) stream BEFORE the set-array verification
-    // joins — shuffling duplicate candidates through two joins and the
-    // per-row array_intersect costs far more than the early distinct
-    // (driver bench r2: 51.6 s with the late distinct vs the single-
-    // pass formulation's ~4 s; the duplicated verify work was the gap).
-    val cand = prefix.select($"doc_id".as("doc_a"), $"h", $"n_sh".as("pna"))
+    prefix.select($"doc_id".as("doc_a"), $"h", $"n_sh".as("pna"))
       .join(prefix.select($"doc_id".as("doc_b"), $"h", $"n_sh".as("pnb")),
         "h")
-      .filter($"doc_a" < $"doc_b"
-        && $"pnb" >= ceil($"pna" * 0.6) && $"pna" >= ceil($"pnb" * 0.6))
+      .filter($"doc_a" < $"doc_b" && $"pnb" >= Jaccard.ceilT("pna")
+        && $"pna" >= Jaccard.ceilT("pnb"))
       .select($"doc_a", $"doc_b")
-      .distinct()
-    // shared hashed-set verify (SHUFFLE_HASH set joins + native long
-    // overlap kernel — see overlapVerify); its exact-integer threshold
-    // `8c ≥ 3(na+nb)` is what makes the prefix candidate rule above
-    // provably lossless (J ≥ 3/5 exactly, no sub-threshold rounding
-    // admits). UNSORTED — the collapsed wrapper sorts once, after the
-    // dup-group expansion.
-    verifyJaccard(cand, sh)
   }
 
   /** CONTAINMENT near-dup pairs: |A∩B| / min(|A|,|B|) ≥ 0.7 over the
@@ -421,9 +363,9 @@ object LlmOps {
     val sh = shingleIndex(spark, sfDir)
     // round-12 (VERDICT r11 #1): hashed-set verify, not the exploded
     // index join — this was the third-slowest x10 sweep key on the
-    // overlapFor shape (17.1 s) for pure shuffle mass
-    verifyContainment(cappedCandidates(sh, Tables(spark, sfDir, "documents")),
-      sh)
+    // exploded-overlap shape (17.1 s) for pure shuffle mass
+    verify(Containment,
+      cappedCandidates(sh, Tables(spark, sfDir, "documents")), sh)
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -540,15 +482,11 @@ object LlmOps {
     * OpsRound3Spec constructs both the ≤cap case the screen must catch
     * and the >cap case it documents as lost), and the measured
     * recall-vs-lossless at x3/x10 is recorded in SCALE.md. The
-    * LOSSLESS formulation survives as
-    * [[dedupContainmentPrefixLossless]] — the declared exactness rung
-    * for moderate corpora (same oracle, no screen, superlinear tail by
-    * design). */
+    * LOSSLESS formulation (same rule, no screen, superlinear tail by
+    * design) is the exactness referee in `Referees` (src/test). */
   def dedupContainmentPrefix(spark: SparkSession, sfDir: String): DataFrame =
     dedupContainmentPrefixScreened(shingleIndex(spark, sfDir),
-      Tables(spark, sfDir, "documents"),
-      Some(dupGroupsMemo(spark, sfDir)),
-      Some(ctpCensusMemo(spark, sfDir)))
+      dupGroupsMemo(spark, sfDir), Some(ctpCensusMemo(spark, sfDir)))
 
   /** The memoized priced-mass census for the declared corpus (round 14,
     * VERDICT r13 #2): the census is a pure derivation of the rep-shingle
@@ -572,37 +510,23 @@ object LlmOps {
         shingleIndex(spark, sfDir).join(reps, "doc_id")))
     }
 
-  /** Core over an arbitrary documents relation — the OpsRound3Spec
-    * popular-fragment probes rebuild the plan on adversarial corpora
-    * through this. */
-  private[graft] def dedupContainmentPrefixOn(docs: DataFrame): DataFrame =
-    dedupContainmentPrefixScreened(
-      shingleDf(docs).transform(graft.Tables.truncate), docs)
-
-  /** Round 12: collapse-then-expand (see [[dedupJaccardPrefix]] — the
-    * same x30 dup-group finding applies, and the asymmetric measure
-    * makes it worse: a G-copy group pairs G² ways through EVERY shared
-    * sub-cap shingle). Mining over one representative per distinct
-    * text also RETIRES the exact-dup rescue on this path — identical
-    * texts cannot exist among representatives, and the expansion's
-    * within-group leg emits exactly the pairs the rescue existed to
-    * save (now at containment 1.0 without re-verification). The screen
-    * threshold now reads the DISTINCT-text count, which only ever
-    * raises recall (popular identical docs no longer inflate their own
-    * shingles' df past the cap). */
+  /** Round 12: collapse-then-expand ([[mineCollapsed]]; see
+    * [[dedupJaccardPrefix]] — the same x30 dup-group finding applies,
+    * and the asymmetric measure makes it worse: a G-copy group pairs G²
+    * ways through EVERY shared sub-cap shingle). Mining over one
+    * representative per distinct text also RETIRES the exact-dup rescue
+    * on this path — identical texts cannot exist among representatives,
+    * and the expansion's within-group leg emits exactly the pairs the
+    * rescue existed to save (now at containment 1.0 without
+    * re-verification). The screen threshold now reads the
+    * DISTINCT-text count, which only ever raises recall (popular
+    * identical docs no longer inflate their own shingles' df past the
+    * cap). `memb` is the dup-group census ([[dupGroups]]); with no
+    * `censusOpt` the priced-mass census is derived inline. */
   private[graft] def dedupContainmentPrefixScreened(sh: DataFrame,
-      docs: DataFrame, membOpt: Option[DataFrame] = None,
-      censusOpt: Option[DataFrame] = None): DataFrame = {
-    import sh.sparkSession.implicits._
-    val memb = membOpt.getOrElse(dupGroups(docs))
-    val reps = memb.filter($"rep_id" === $"doc_id").select($"doc_id")
-    val repSh = sh.join(reps, "doc_id")
-    val repPairs = verifyContainment(
-      containmentPrefixCandScreened(repSh, reps, censusOpt = censusOpt)
-        .distinct(), repSh)
-    expandDupPairs(repPairs, memb, repSh, "containment")
-      .orderBy($"doc_a", $"doc_b")
-  }
+      memb: DataFrame, censusOpt: Option[DataFrame] = None): DataFrame =
+    mineCollapsed(sh, memb, Containment)((repSh, reps) =>
+      containmentPrefixCandScreened(repSh, reps, censusOpt = censusOpt))
 
   /** Declared candidate-mass budget of the ADAPTIVE screen (VERDICT
     * r12 #1), in units of prefix·index JOIN ROWS — an upper bound on
@@ -632,9 +556,9 @@ object LlmOps {
     * the hash-tie-broken prefix the candidate join actually uses and
     * (b) computable IDENTICALLY by the DuckDB twin (plain
     * `rank() OVER (ORDER BY f)`), which must replay the cap choice
-    * bit-for-bit for the hash gate to hold. The prefix bound uses the
-    * exact-integer form `(7·n+9) div 10 = ceil(0.7·n)` (round-12
-    * discipline — no double arithmetic in replayed logic). Cumulation
+    * bit-for-bit for the hash gate to hold. The prefix bound is
+    * [[Containment]]'s exact-integer one (round-12 discipline — no
+    * double arithmetic in replayed logic). Cumulation
     * rides [[TwoPass.cumsum]] (no corpus-wide window; the level
     * relation is df-spectrum-sized anyway). Cost: one pass over the
     * ranked index reusing its doc_id exchange, then spectrum-sized
@@ -645,7 +569,7 @@ object LlmOps {
     val wTie = Window.partitionBy($"doc_id", $"f")
     val levels = ranked
       .withColumn("rf", min($"rn").over(wTie))
-      .filter($"rf" <= $"n_sh" - expr("(7L * n_sh + 9L) div 10L") + 1L)
+      .filter($"rf" <= Containment.prefix("n_sh"))
       .groupBy($"f").agg(sum($"f").as("m"))
     TwoPass.cumsum(levels, "f", Seq("m"))
   }
@@ -691,7 +615,7 @@ object LlmOps {
     import spark.implicits._
     val ranked = rankedShingles(sh)
     val probe = ranked
-      .filter($"rn" <= $"n_sh" - ceil($"n_sh" * 0.7) + 1)
+      .filter($"rn" <= Containment.prefix("n_sh"))
       .select($"doc_id".as("pa"), $"h", $"n_sh".as("na"))
     // the screen: index keeps only sub-cap shingles. The threshold is
     // a broadcast 1-row aggregate (never a driver value): the generous
@@ -699,7 +623,7 @@ object LlmOps {
     // corpus's df spectrum would otherwise overflow the budget. The
     // census is the memoized corpus artifact when the caller maintains
     // one (the declared key does — see [[ctpCensusMemo]]); ad-hoc
-    // corpora (spec probes, [[dedupContainmentPrefixOn]]) derive it
+    // corpora (spec probes, `Referees` in src/test) derive it
     // inline from the same ranked relation, bit-identically.
     val gen = docs.agg(greatest(lit(capFloor), count(lit(1)) * capFrac)
       .as("gencap"))
@@ -730,43 +654,19 @@ object LlmOps {
     * that is COMMON relative to the partner's other shingles sits
     * late in its rank order and proves nothing), while every true
     * pair keeps its w₁ match by the theorem. */
-  private val posFilter: Column =
-    col("rnb") <= col("nb") - ceil(col("na") * 0.7) + 1
+  private[graft] val posFilter: Column =
+    col("rnb") <= col("nb") - Containment.ceilT("na") + 1
 
-  /** The round-10 LOSSLESS formulation — kept as the exactness rung:
-    * result EQUALS the uncapped reference by the prefix theorem (the
-    * index side keeps ALL shingles), at a measured superlinear cost on
-    * head-heavy corpora (tail α ≈ 2.1 at x10 — the reason the declared
-    * key runs [[dedupContainmentPrefixScreened]] instead). Reach for
-    * this rung when exactness outweighs the tail, or as the recall
-    * referee for the screen (OpsRound3Spec / SCALE.md). */
-  private[graft] def dedupContainmentPrefixLossless(sh: DataFrame): DataFrame =
-    verifyContainment(containmentPrefixCandLossless(sh).distinct(), sh)
-      .orderBy(col("doc_a"), col("doc_b"))
-
-  /** Lossless candidate stage of [[dedupContainmentPrefixLossless]]. */
-  private[graft] def containmentPrefixCandLossless(sh: DataFrame): DataFrame = {
-    val spark = sh.sparkSession
-    import spark.implicits._
-    val ranked = rankedShingles(sh)
-    val probe = ranked
-      .filter($"rn" <= $"n_sh" - ceil($"n_sh" * 0.7) + 1)
-      .select($"doc_id".as("pa"), $"h", $"n_sh".as("na"))
-    val index = ranked
-      .select($"doc_id".as("pb"), $"h", $"n_sh".as("nb"), $"rn".as("rnb"))
-    probe.join(index, "h")
-      .filter($"na" < $"nb" || ($"na" === $"nb" && $"pa" < $"pb"))
-      .filter(posFilter)
-      .select(least($"pa", $"pb").as("doc_a"),
-        greatest($"pa", $"pb").as("doc_b"))
-  }
-
-  /** Shared rarity ranking of the shingle index: per doc, shingles
-    * ordered by the same (frequency, shingle-hash) global total order
-    * as the Jaccard prefix join — any single consistent order
-    * satisfies the prefix candidate rule, and exact verification
-    * downstream keeps every EMITTED containment exact regardless of
-    * the order chosen. */
+  /** The ONE rarity ranking of the shingle index, shared by both prefix
+    * miners and the priced-mass census: per doc, shingles ordered by the
+    * global (frequency, shingle-hash) total order (`rn`), plus the doc's
+    * set size `n_sh`. Any single consistent order satisfies the prefix
+    * candidate rule, and exact verification downstream keeps every
+    * EMITTED similarity exact regardless of the order chosen; 8-byte
+    * hashes sort and join far cheaper than shingle strings. `n_sh`
+    * comes from a second Window over the SAME doc_id partitioning (one
+    * exchange feeds both window operators) — NOT a broadcast of the
+    * per-doc sizes, an O(corpus)-row driver payload at scale. */
   private[graft] def rankedShingles(sh: DataFrame): DataFrame = {
     val spark = sh.sparkSession
     import spark.implicits._
@@ -797,22 +697,28 @@ object LlmOps {
         count(lit(1)).as("n_sh"))
   }
 
-  /** The shared verify-join shape: candidate (doc_a, doc_b) pairs pick
-    * up both docs' hashed set arrays and the native long-overlap
-    * kernel counts |A∩B| per pair — one set row per doc, SHUFFLE_HASH
-    * joins, allocation-free probe count. NOT [[overlapFor]]'s exploded
-    * index join: the explode mass there (Σ|A| shingle rows re-shuffled
-    * and re-aggregated per candidate) measured ~500 s at x10 on the
-    * containment-prefix candidates while this set verify of the same
-    * pairs is seconds; round 12 routes ALL exact miners through here
-    * (VERDICT r11 #1 — the capped miners were the three slowest sweep
-    * keys on the exploded shape). SHUFFLE_HASH, not broadcast: the
-    * array payload is wide, and a driver-side broadcast build of it is
-    * the one step that degrades under a long session's heap pressure
-    * (measured 5 s → 18 s inside the full bench suite); a shuffle hash
-    * join keeps the arrays executor-side and is the same plan you'd
-    * run past broadcast size anyway. */
-  private def overlapVerify(cand: DataFrame, sh: DataFrame): DataFrame = {
+  /** Exact verification of a candidate (doc_a, doc_b) pair stream under
+    * measure `m`: both docs' hashed set arrays join in and the native
+    * long-overlap kernel counts |A∩B| per pair — one set row per doc,
+    * SHUFFLE_HASH joins, allocation-free probe count — then `m`'s
+    * exact-integer filter keeps the pair and emits its quantized value
+    * (see [[Measure]]). NOT an exploded index join: the explode mass
+    * there (Σ|A| shingle rows re-shuffled and re-aggregated per
+    * candidate) measured ~500 s at x10 on the containment-prefix
+    * candidates while this set verify of the same pairs is seconds;
+    * round 12 routes ALL exact miners through here (VERDICT r11 #1 —
+    * the capped miners were the three slowest sweep keys on the
+    * exploded shape). SHUFFLE_HASH, not broadcast: the array payload is
+    * wide, and a driver-side broadcast build of it is the one step that
+    * degrades under a long session's heap pressure (measured 5 s → 18 s
+    * inside the full bench suite); a shuffle hash join keeps the arrays
+    * executor-side and is the same plan you'd run past broadcast size
+    * anyway. UNSORTED — pair-report callers add the presentation sort;
+    * the collapsed prefix path sorts only once, after its dup-group
+    * expansion, and [[clusterLabels]] feeds connected components and
+    * must not pay a global range sort it immediately discards. */
+  private[graft] def verify(m: Measure, cand: DataFrame,
+      sh: DataFrame): DataFrame = {
     val spark = cand.sparkSession
     import spark.implicits._
     val sets = hashedSets(sh)
@@ -823,49 +729,8 @@ object LlmOps {
         $"n_sh".as("nb")).hint("SHUFFLE_HASH"), "doc_b")
       .withColumn("common",
         graft.functions.SetExpressions.overlapCountLong(spark)($"sa", $"sb"))
-  }
-
-  /** Containment verification of a candidate pair stream: exact
-    * |A∩B|/min(|A|,|B|) ≥ 0.7 over the full hashed shingle sets
-    * (see [[overlapVerify]] for the join shape and the hashing
-    * exactness argument). Round 12 (ADVICE r11): the threshold is
-    * EXACT-RATIONAL — `10·common ≥ 7·min(na,nb)` over integers — and
-    * the emitted containment is quantized by exact integer HALF_UP
-    * (`round(10⁴·c/m) = (2·10⁴·c + m) div 2m`, presentation divide by
-    * 10⁴). The previous `r4(c/m) ≥ 0.7` admitted true containment down
-    * to 0.69995 while the prefix candidate bound assumed
-    * `c ≥ ceil(0.7·|A|)` — a rounding-boundary gap between emission
-    * and candidate generation; the integer filter makes the prefix
-    * bound provably lossless (`10c ≥ 7m ⟺ c ≥ ceil(0.7·m)` for
-    * integer c), and the integer quantization removes the per-pair
-    * decimal-half-tie divergence class the calibration key hit at x10.
-    * UNSORTED (like [[verifyJaccard]]) — pair-report callers add the
-    * presentation sort; the collapsed prefix path sorts only once,
-    * after its dup-group expansion. */
-  private[graft] def verifyContainment(cand: DataFrame, sh: DataFrame): DataFrame = {
-    import cand.sparkSession.implicits._
-    overlapVerify(cand, sh)
-      .filter(expr("10L * common >= 7L * least(na, nb)"))
-      .select($"doc_a", $"doc_b",
-        (expr("(20000L * common + least(na, nb))" +
-          " div (2L * least(na, nb))") / 10000.0).as("containment"))
-  }
-
-  /** Jaccard verification of a candidate pair stream: exact
-    * |A∩B|/|A∪B| ≥ 0.6 over the full hashed shingle sets (join shape:
-    * [[overlapVerify]]). Same round-12 exact-integer discipline as
-    * [[verifyContainment]]: `J ≥ 3/5 ⟺ 8·common ≥ 3·(na+nb)` over
-    * integers, emitted value `(2·10⁴·c + u) div 2u` over u = |A∪B|.
-    * UNSORTED — pair-report callers add the presentation sort;
-    * [[clusterLabels]] feeds connected components and must not pay a
-    * global range sort it immediately discards. */
-  private[graft] def verifyJaccard(cand: DataFrame, sh: DataFrame): DataFrame = {
-    import cand.sparkSession.implicits._
-    overlapVerify(cand, sh)
-      .filter(expr("8L * common >= 3L * (na + nb)"))
-      .select($"doc_a", $"doc_b",
-        (expr("(20000L * common + (na + nb - common))" +
-          " div (2L * (na + nb - common))") / 10000.0).as("jaccard"))
+      .filter(m.keep)
+      .select($"doc_a", $"doc_b", m.value)
   }
 
   /** INCREMENTAL (delta-ingest) dedup — the production shape when a
@@ -885,7 +750,7 @@ object LlmOps {
     val batch = sh.filter($"doc_id" % 10 === 0)
     val corpus = sh.filter($"doc_id" % 10 =!= 0)
     val bsz = batch.groupBy($"doc_id").agg(count(lit(1)).as("n_new"))
-    // round-12 exact-integer discipline (see verifyContainment):
+    // round-12 exact-integer discipline (see Measure):
     // threshold `C ≥ 3/5 ⟺ 5·common ≥ 3·n_new` over integers, value
     // quantized by exact integer HALF_UP — no r4-on-double half-ties
     batch.select($"doc_id".as("new_id"), $"shingle")
@@ -921,12 +786,9 @@ object LlmOps {
     val banded = sig
       .select($"doc_id", explode(array(bandStructs: _*)).as("bk"))
       .select($"doc_id", $"bk.band", $"bk.band_key")
-    val candidates = banded.select($"doc_id".as("doc_a"), $"band", $"band_key")
-      .join(banded.select($"doc_id".as("doc_b"), $"band", $"band_key"),
-        Seq("band", "band_key"))
-      .filter($"doc_a" < $"doc_b")
+    val candidates = selfPairs(banded, "band", "band_key")
       .select($"doc_a", $"doc_b").distinct()
-    verifyJaccard(candidates, sh)
+    verify(Jaccard, candidates, sh)
       .orderBy($"doc_a", $"doc_b")
   }
 
@@ -1168,21 +1030,6 @@ object LlmOps {
       .orderBy($"doc_id")
   }
 
-  /** Near-dup CLUSTERS: the operator a real dedup pipeline runs after
-    * pair mining — connected components over the near-dup pair graph,
-    * yielding a deterministic canonical representative (min id) per
-    * cluster. Edges are the EXACT shingle-Jaccard near-dup pairs
-    * ([[dedupNgramJaccardOn]] at J ≥ 0.6 — the same pairs the pair
-    * REPORT key emits), so a cluster is precisely the transitive
-    * closure of the reported near-dups. Every stage is bounded at
-    * scale: candidate pairs come from the shingle inverted index
-    * (Σdf² work, only docs SHARING a shingle ever pair — never a
-    * corpus² pair space), and components run via
-    * [[Graph.connectedComponents]] (driver-loop shortcutting
-    * min-label propagation, one distributed job per round — Spark's
-    * recursive-CTE substitute). The brute-force embedding pair miner
-    * stays where it belongs: [[dedupEmbedding]], the declared O(n²)
-    * correctness baseline. */
   /** (id, component) labels of the text near-dup graph — the shared
     * clustering both [[dedupCluster]] and [[splitLeakageSafe]] build
     * on. Computed ONCE per (session, sfDir) and materialized to a
@@ -1197,17 +1044,29 @@ object LlmOps {
   private def clusterLabels(spark: SparkSession, sfDir: String): DataFrame =
     Memo.parquet(spark, sfDir, "cluster-labels") {
       import spark.implicits._
-      // round-10: edges come from the CAPPED candidate rule (the same
-      // pair set the declared q_dedup_ngram_jaccard key emits, minus
-      // its presentation sort — scale-safe candidate mass)
-      val sh = shingleIndex(spark, sfDir)
-      val pairs = verifyJaccard(
-          cappedCandidates(sh, Tables(spark, sfDir, "documents")), sh)
+      // edges: the declared pair report's rows, minus its sort
+      val pairs = cappedJaccard(shingleIndex(spark, sfDir),
+          Tables(spark, sfDir, "documents"))
         .select($"doc_a".as("src"), $"doc_b".as("dst"))
       val nodes = Tables(spark, sfDir, "documents").select($"doc_id".as("id"))
       Graph.connectedComponents(nodes, pairs)
     }
 
+  /** Near-dup CLUSTERS: the operator a real dedup pipeline runs after
+    * pair mining — connected components over the near-dup pair graph,
+    * yielding a deterministic canonical representative (min id) per
+    * cluster. Edges are the EXACT shingle-Jaccard near-dup pairs
+    * ([[cappedJaccard]] at J ≥ 0.6 — the same pairs the pair REPORT
+    * key [[dedupNgramJaccard]] emits), so a cluster is precisely the
+    * transitive closure of the reported near-dups. Every stage is
+    * bounded at scale: candidate pairs come from the capped shingle
+    * inverted index (only docs SHARING a sub-cap shingle ever pair —
+    * never a corpus² pair space), and components run via
+    * [[Graph.connectedComponents]] (driver-loop shortcutting
+    * min-label propagation, one distributed job per round — Spark's
+    * recursive-CTE substitute). The brute-force embedding pair miner
+    * stays where it belongs: [[dedupEmbedding]], the declared O(n²)
+    * correctness baseline. */
   def dedupCluster(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     clusterLabels(spark, sfDir).orderBy($"id")
@@ -1942,7 +1801,7 @@ object LlmOps {
     * 100 TB this runs as a map stage at scan speed, and the selected
     * sets (≈ 1/w of the grams) are what a winnowing-based dedup would
     * explode into an inverted index (the Σdf² candidate machinery
-    * [[dedupNgramJaccardOn]] already provides downstream). */
+    * [[shinglePairCounts]] already provides downstream). */
   /** (doc_id, n_grams, sel) winnowing selection — the row-local
     * pipeline shared by [[textWinnow]] (the per-doc report key) and
     * [[dedupWinnow]] (the sparse-fingerprint pair miner).
@@ -2003,7 +1862,7 @@ object LlmOps {
     * grams per document (the winnowing guarantee keeps any shared run
     * ≥ w+k-1 tokens detectable), so index size, Σdf² candidate mass
     * and shuffle volume all shrink ~w× vs the full-shingle miner
-    * ([[dedupNgramJaccardOn]]) while the pair semantics stay
+    * ([[dedupNgramJaccard]]) while the pair semantics stay
     * set-overlap on a deterministic selection. Same two-stage shape:
     * fingerprint-keyed equi join (never corpus²), per-pair overlap
     * count, exact set-size join, similarity filter. */
@@ -2014,13 +1873,11 @@ object LlmOps {
       .transform(Tables.truncate)
     val inv = s.select($"doc_id", explode($"sel").as("fp"))
     val sz = s.select($"doc_id", size($"sel").as("n"))
-    inv.select($"doc_id".as("doc_a"), $"fp")
-      .join(inv.select($"doc_id".as("doc_b"), $"fp"), "fp")
-      .filter($"doc_a" < $"doc_b")
+    selfPairs(inv, "fp")
       .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("common"))
       .join(sz.select($"doc_id".as("doc_a"), $"n".as("na")), "doc_a")
       .join(sz.select($"doc_id".as("doc_b"), $"n".as("nb")), "doc_b")
-      // round-12 exact-integer discipline (see verifyJaccard):
+      // round-12 exact-integer discipline (see Measure):
       // J ≥ 1/2 ⟺ 3·common ≥ na+nb over integers, value quantized by
       // exact integer HALF_UP
       .filter(expr("3L * common >= na + nb"))
@@ -4977,7 +4834,7 @@ object LlmOps {
     "q_dedup_exact" -> dedupExact,
     "q_dedup_latest" -> dedupLatest,
     "q_dedup_ngram_jaccard" -> dedupNgramJaccard,
-    "q_dedup_ngram_capped" -> dedupNgramCapped,
+    "q_dedup_ngram_capped" -> dedupNgramJaccard,
     "q_dedup_jaccard_prefix" -> dedupJaccardPrefix,
     "q_dedup_containment" -> dedupContainment,
     "q_dedup_containment_prefix" -> dedupContainmentPrefix,

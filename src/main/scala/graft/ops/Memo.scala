@@ -65,6 +65,19 @@ private[graft] object Memo {
   val buildSeconds: java.util.concurrent.ConcurrentHashMap[String, Double] =
     new java.util.concurrent.ConcurrentHashMap[String, Double]
 
+  /** Snapshot [[buildSeconds]] now; the returned function lists the
+    * builds run since, as (kind, seconds), slowest first. A harness
+    * takes it right before a memo phase, so builds an earlier phase ran
+    * for the same corpus (a warmup over the same dir) are not reported
+    * as this phase's. */
+  def trackBuilds(): () => Seq[(String, Double)] = {
+    import scala.jdk.CollectionConverters._
+    val before = buildSeconds.asScala.toMap
+    () => buildSeconds.asScala.toSeq
+      .map { case (k, v) => (k.takeWhile(_ != '@'), v - before.getOrElse(k, 0.0)) }
+      .filter(_._2 > 0).sortBy(-_._2)
+  }
+
   private def deleteDir(path: String): Unit =
     try {
       import scala.jdk.CollectionConverters._

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
 
 /** Distributed PREFIX SUMS without a corpus-wide window — the shared
   * machinery behind every global running total in this repo (KS CDFs,
@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * never on sampled range boundaries or partition count — so results
   * are layout-invariant (the consumers are pinned in
   * PartitionInvarianceSpec; OpsRound21Spec pins this formulation
-  * against the retired fold side by side).
+  * against a plain `sum() OVER (ORDER BY k)` running sum).
   */
 private[graft] object TwoPass {
 
@@ -72,46 +72,6 @@ private[graft] object TwoPass {
     val local = graft.Tables.truncate(piped)
     // P rows of per-partition totals → exclusive prefix offsets; the
     // unpartitioned window spans partition-count rows, not data
-    val totals = local.groupBy(col("__pid"))
-      .agg(sum(col(sumCols.head)).as(s"__t_${sumCols.head}"),
-        sumCols.tail.map(c => sum(col(c)).as(s"__t_$c")): _*)
-    val w = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sumCols.foldLeft(totals) { (d, c) =>
-      d.withColumn(s"__o_$c",
-        coalesce(sum(col(s"__t_$c")).over(w), lit(0L)))
-    }.select(col("__pid") +: sumCols.map(c => col(s"__o_$c")): _*)
-    val joined = local.join(broadcast(offsets), "__pid")
-    sumCols.foldLeft(joined) { (d, c) =>
-      d.withColumn(s"cum_$c", col(s"__l_$c") + col(s"__o_$c"))
-    }.drop("__pid" +: sumCols.flatMap(c => Seq(s"__l_$c", s"__o_$c")): _*)
-  }
-
-  /** The retired round-8..13 formulation — the whole-Row-encoder
-    * `mapPartitions` fold (Deserialize/SerializeFromObject in the
-    * pipeline). Kept ONLY as the side-by-side referee for
-    * OpsRound21Spec; no query path calls it. */
-  private[graft] def cumsumFoldRetired(df: DataFrame, orderCol: String,
-      sumCols: Seq[String], nParts: Int = 8): DataFrame = {
-    val withPid = df
-      .repartitionByRange(nParts, col(orderCol))
-      .sortWithinPartitions(col(orderCol))
-      .withColumn("__pid", spark_partition_id())
-    val inCols = withPid.columns
-    val sumIdx = sumCols.map(c => inCols.indexOf(c))
-    require(sumIdx.forall(_ >= 0), s"missing sum column in ${inCols.toSeq}")
-    require(sumIdx.forall(i => withPid.schema(i).dataType == LongType),
-      "cumsum columns must be LongType")
-    val outSchema = StructType(withPid.schema.fields ++
-      sumCols.map(c => StructField(s"__l_$c", LongType, nullable = false)))
-    val local = withPid.mapPartitions { it =>
-      val acc = Array.fill(sumIdx.length)(0L)
-      it.map { r =>
-        var i = 0
-        while (i < sumIdx.length) { acc(i) += r.getLong(sumIdx(i)); i += 1 }
-        Row.fromSeq(r.toSeq ++ acc.toSeq)
-      }
-    }(Encoders.row(outSchema))
     val totals = local.groupBy(col("__pid"))
       .agg(sum(col(sumCols.head)).as(s"__t_${sumCols.head}"),
         sumCols.tail.map(c => sum(col(c)).as(s"__t_$c")): _*)

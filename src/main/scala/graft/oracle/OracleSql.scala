@@ -794,7 +794,7 @@ object OracleSql {
 
   // exact-Jaccard verification of `cand` over the FULL shingle stream;
   // exposes `jp(doc_a, doc_b, jaccard)` at the 0.6 threshold.
-  // Round-12 exact-integer discipline (mirrors LlmOps.verifyJaccard):
+  // Round-12 exact-integer discipline (mirrors LlmOps.Jaccard):
   // threshold `J ≥ 3/5 ⟺ 8·common ≥ 3·(na+nb)` over integers — the
   // previous round(...,4) >= 0.6 admitted true J down to 0.59995,
   // opening a rounding-boundary gap against prefix candidate bounds —

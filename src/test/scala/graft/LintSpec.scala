@@ -41,6 +41,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Session.local`, so `SparkSession.builder()` appears in `src/main`
   * only in Session.scala — a second builder is a copy of the policy
   * that drifts from it.
+  *
+  * Referee policy: a `private[graft]` def or val that no `src/main`
+  * code reaches is a formulation only tests run — it belongs in
+  * `src/test` (see `Referees`), not on the engine's surface.
   */
 class LintSpec extends AnyFunSuite {
 
@@ -148,5 +152,31 @@ class LintSpec extends AnyFunSuite {
       "build sessions through Session.local, not a new builder:\n" +
         outside.mkString("\n"))
     assert(sites.nonEmpty, "Session.scala no longer builds the session")
+  }
+
+  test("every private[graft] def/val in src/main is reached from src/main") {
+    val declRe = ("""private\[graft\]\s+(?:final\s+)?(?:lazy\s+)?""" +
+      """(?:def|val)\s+([A-Za-z_][A-Za-z0-9_]*)""").r
+    // code lines only: doc and comment lines (and trailing // comments)
+    // may mention a name without reaching it
+    val code = scalaFiles(new java.io.File("src/main")).flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f.toPath)
+      (0 until lines.size()).map(i => (f.getPath, i, lines.get(i)))
+        .filterNot { case (_, _, l) =>
+          val t = l.trim
+          t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
+        }
+        .map { case (p, i, l) => (p, i, l.replaceAll("//.*$", "")) }
+    }
+    val unreached = for {
+      (p, i, l) <- code
+      name <- declRe.findAllMatchIn(l).map(_.group(1))
+      ref = s"\\b$name\\b".r
+      if !code.exists { case (p2, j, l2) =>
+        (p2 != p || j != i) && ref.findFirstIn(l2).isDefined }
+    } yield s"$name ($p:${i + 1})"
+    assert(unreached.isEmpty,
+      "private[graft] members only tests reach — move them to src/test:\n" +
+        unreached.mkString("\n"))
   }
 }

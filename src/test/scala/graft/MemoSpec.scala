@@ -84,4 +84,15 @@ class MemoSpec extends SparkSpec {
     }
     assert(built.last.schema.fieldNames.toSeq === Seq(s"c${Memo.MaxEntries}"))
   }
+
+  test("trackBuilds reports only the builds run after it") {
+    // a warmup pass over the SAME corpus builds first; the tracked
+    // phase then hits that artifact and builds one new kind
+    Memo.parquet(spark, corpus, "spec-warm")(spark.range(2).toDF("w"))
+    val builds = Memo.trackBuilds()
+    Memo.parquet(spark, corpus, "spec-warm")(fail("a hit must not rebuild"))
+    Memo.parquet(spark, corpus, "spec-phase")(spark.range(2).toDF("p"))
+    assert(builds().map(_._1) === Seq("spec-phase"))
+    assert(builds().forall(_._2 > 0))
+  }
 }

@@ -15,11 +15,11 @@ class OpsRound14Spec extends SparkSpec {
   test("capped miner: subset of uncapped pairs with identical exact jaccard") {
     // round-10: the declared key IS capped, so the uncapped reference
     // comes from the retained probe formulation
-    val uncapped = ops.LlmOps.dedupNgramJaccardFromShingles(
+    val uncapped = Referees.dedupNgramJaccardFromShingles(
         ops.LlmOps.shingleIndex(spark, sfDir))
       .as[(Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
-    val capped = ops.LlmOps.dedupNgramCapped(spark, sfDir)
+    val capped = ops.LlmOps.queries("q_dedup_ngram_capped")(spark, sfDir)
       .as[(Long, Long, Double)].collect()
     assert(capped.nonEmpty)
     // candidate pruning can only DROP pairs, never add or distort:
@@ -56,9 +56,9 @@ class OpsRound14Spec extends SparkSpec {
     val headOnly = (100L until 110L).map(i =>
       (i, s"a b c d e f g h i j u$i"))
     val docs = (tailDocs ++ headOnly).toDF("doc_id", "text")
-    val uncapped = ops.LlmOps.dedupNgramJaccardOn(docs)
+    val uncapped = Referees.dedupNgramJaccardOn(docs)
       .as[(Long, Long, Double)].collect().map(t => (t._1, t._2)).toSet
-    val capped = ops.LlmOps.dedupNgramCappedOn(docs)
+    val capped = Referees.dedupNgramCappedOn(docs)
       .as[(Long, Long, Double)].collect().map(t => (t._1, t._2)).toSet
     val trueDups = (0L until 40L by 2).map(i => (i, i + 1)).toSet
     val headPairs = (for {
@@ -78,7 +78,7 @@ class OpsRound14Spec extends SparkSpec {
     val fillers = (100L until 130L).map(i =>
       (i, (0 until 9).map(j => s"f${i}_$j").mkString(" ")))
     val docs = (copies ++ fillers).toDF("doc_id", "text")
-    val capped = ops.LlmOps.dedupNgramCappedOn(docs)
+    val capped = Referees.dedupNgramCappedOn(docs)
       .as[(Long, Long, Double)].collect()
     assert(capped.length === 20 * 19 / 2)
     assert(capped.forall(_._3 === 1.0))

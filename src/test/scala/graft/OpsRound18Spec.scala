@@ -68,7 +68,7 @@ class OpsRound18Spec extends SparkSpec {
       (1L, "a b c d e f g h i x1 y1 z1"),
       (2L, "a b c d e f g h i x2 y2 z2")
     ).toDF("doc_id", "text")
-    val pairs = ops.LlmOps.dedupContainmentPrefixOn(docs).collect()
+    val pairs = Referees.dedupContainmentPrefixOn(docs).collect()
     assert(pairs.length === 1, pairs.mkString(","))
     assert(pairs(0).getDouble(2) === 0.7, "exact-boundary pair must emit 0.7")
   }

@@ -17,7 +17,8 @@ class OpsRound19Spec extends SparkSpec {
 
   private def pairsOf(cand: org.apache.spark.sql.DataFrame,
       sh: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-    graft.ops.LlmOps.verifyContainment(cand.distinct(), sh)
+    graft.ops.LlmOps.verify(graft.ops.LlmOps.Containment, cand.distinct(),
+      sh)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
 
   test("ctp mass census: hand-computed levels on a 3-doc corpus") {

@@ -539,7 +539,7 @@ class OpsRound3Spec extends SparkSpec {
     } yield (a, b, c)).toSet
     val sh = Tables.truncate(graft.ops.LlmOps.shingleDf(
       Tables(spark, sfDir, "documents")))
-    val lossless = graft.ops.LlmOps.dedupContainmentPrefixLossless(sh)
+    val lossless = Referees.dedupContainmentPrefixLossless(sh)
       .as[(Long, Long, Double)].collect().toSet
     assert(lossless === want)
     val got = graft.ops.LlmOps.dedupContainmentPrefix(spark, sfDir)
@@ -569,7 +569,7 @@ class OpsRound3Spec extends SparkSpec {
     // on the adversarial corpus through the same private cores
     val sh = graft.ops.LlmOps.shingleDf(docs).transform(Tables.truncate)
     val capped = pairsOf(
-      graft.ops.LlmOps.overlapFor(
+      Referees.overlapFor(
         graft.ops.LlmOps.cappedCandidates(sh, docs), sh)
         .select($"doc_a", $"doc_b",
           graft.Det.r4($"common" / least($"na", $"nb")).as("containment"))
@@ -577,7 +577,7 @@ class OpsRound3Spec extends SparkSpec {
     assert(capped.intersect(wantPairs).isEmpty,
       "cap must lose the popular-fragment pairs (the documented caveat)")
     val prefix = pairsOf(
-      graft.ops.LlmOps.dedupContainmentPrefixOn(docs))
+      Referees.dedupContainmentPrefixOn(docs))
     assert(wantPairs.subsetOf(prefix),
       "prefix rule must recover every popular-fragment containment pair")
   }
@@ -598,11 +598,11 @@ class OpsRound3Spec extends SparkSpec {
     val docs = ((0L, frag) +: hosts).toDF("doc_id", "text")
     val wantPairs = hosts.map(h => (0L, h._1)).toSet
     val sh = graft.ops.LlmOps.shingleDf(docs).transform(Tables.truncate)
-    val screened = graft.ops.LlmOps.dedupContainmentPrefixOn(docs)
+    val screened = Referees.dedupContainmentPrefixOn(docs)
       .as[(Long, Long, Double)].collect().map(t => (t._1, t._2)).toSet
     assert(screened.intersect(wantPairs).isEmpty,
       "screen must lose the >cap fragment pairs (the documented caveat)")
-    val lossless = graft.ops.LlmOps.dedupContainmentPrefixLossless(sh)
+    val lossless = Referees.dedupContainmentPrefixLossless(sh)
       .as[(Long, Long, Double)].collect().map(t => (t._1, t._2)).toSet
     assert(wantPairs.subsetOf(lossless),
       "lossless rung must recover every >cap fragment pair")
