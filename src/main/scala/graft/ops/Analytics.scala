@@ -1182,9 +1182,9 @@ object Analytics {
     *
     * Scale posture: the naive sweep is `sum(±1) OVER (ORDER BY ts)` —
     * a corpus-wide single-partition window. This runs the same
-    * TWO-PASS cumsum as q_stats_ks (range-partition the per-timestamp
-    * census, partition-local running net via one imperative fold,
-    * P-row offset table broadcast back); the per-day argmax window
+    * TWO-PASS cumsum as q_stats_ks (the per-timestamp census bucketed
+    * on sampled bounds, within-bucket running net, P-row offset table
+    * broadcast back); the per-day argmax window
     * partitions on the calendar day — bounded. The census is
     * ≤ 2·|sessions| rows, already reduced from the event stream. */
   def intervalsConcurrency(spark: SparkSession, sfDir: String): DataFrame = {

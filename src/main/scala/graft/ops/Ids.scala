@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Global contiguous id assignment — the operator every training
@@ -11,18 +10,14 @@ import org.apache.spark.sql.functions._
   *
   * The naive formulation — `row_number() OVER (ORDER BY key)` — is a
   * scale-killer: an empty-partition window collapses the ENTIRE corpus
-  * into one task. The scalable shape (RDD `zipWithIndex`'s two-pass
-  * trick, expressed on the DataFrame API) is:
-  *
-  *   1. range-partition + sort by the key → P sorted runs;
-  *   2. per-partition local ranks (one imperative counter, no shuffle);
-  *   3. per-partition counts → prefix-sum offsets (P rows — metadata
-  *      scale, so the single-partition window over it is free);
-  *   4. broadcast the offsets back: id = offset(p) + local_rank.
+  * into one task. The scalable shape is a prefix sum of 1 over the key
+  * order, so it is [[TwoPass.cumsum]]: rows bucketed on key bounds
+  * sampled once, within-bucket running counts, P-row bucket offsets
+  * broadcast back.
   *
   * The assigned ids depend ONLY on the total order of the (unique) key
-  * — never on the sampled range boundaries or the partition count — so
-  * the result is layout-invariant (pinned in PartitionInvarianceSpec).
+  * — never on the sampled bounds or the partition count — so the
+  * result is layout-invariant (pinned in PartitionInvarianceSpec).
   */
 object Ids {
 
@@ -32,30 +27,10 @@ object Ids {
     * the plan here never funnels the corpus through one task. */
   def idsContiguous(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val nParts = 8
-    val ranked = Tables(spark, sfDir, "documents")
-      .select($"doc_id")
-      .repartitionByRange(nParts, $"doc_id")
-      .sortWithinPartitions($"doc_id")
-      .select($"doc_id", spark_partition_id().as("pid"))
-      .as[(Long, Int)]
-      .mapPartitions { it =>
-        var rank = 0L
-        it.map { case (id, pid) =>
-          val r = rank; rank += 1L; (id, pid, r)
-        }
-      }
-      .toDF("doc_id", "pid", "local_rank")
-    // P rows of (pid, count) → exclusive prefix sum; the unpartitioned
-    // window is over partition-count-many rows, not data
-    val offsets = ranked.groupBy($"pid")
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("offset",
-        coalesce(sum($"cnt").over(Window.orderBy($"pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select($"pid", $"offset")
-    ranked.join(broadcast(offsets), "pid")
-      .select($"doc_id", ($"offset" + $"local_rank").as("row_id"))
+    val ones = Tables(spark, sfDir, "documents")
+      .select($"doc_id", lit(1L).as("one"))
+    TwoPass.cumsum(ones, "doc_id", Seq("one"))
+      .select($"doc_id", ($"cum_one" - 1L).as("row_id"))
       .filter($"doc_id" % 37 === 0)
       .orderBy($"doc_id")
   }

@@ -4229,9 +4229,9 @@ object LlmOps {
     * be i.i.d. rather than id-contiguous — the manifest math is
     * order-agnostic.
     *
-    * Scale posture: one range partition + local fold + P-row offset
-    * broadcast (the zipWithIndex discipline); the manifest rollup
-    * partial-aggs on shard_id. */
+    * Scale posture: one bucketed within-bucket running sum + P-row
+    * offset broadcast (the zipWithIndex discipline); the manifest
+    * rollup partial-aggs on shard_id. */
   def shardManifest(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val b = Tables(spark, sfDir, "documents")

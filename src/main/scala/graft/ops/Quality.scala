@@ -397,8 +397,8 @@ object Quality {
     * divide both engines; Det.r4 on top).
     *
     * Scale posture: the census partial-aggs map-side to one row per
-    * distinct score; the running total uses [[TwoPass.cumsum]] (range
-    * partition + per-partition fold + P-row offset broadcast), never
+    * distinct score; the running total uses [[TwoPass.cumsum]]
+    * (within-bucket running sums + P-row offset broadcast), never
     * a corpus-wide `sum() OVER (ORDER BY …)` single-task window; the
     * final fold is a partial-agged scalar. Ties across documents
     * collapse into one census row, so tie handling is exact, not
@@ -574,10 +574,10 @@ object Quality {
     *
     * Scale posture: the naive cumsum is `sum() OVER (ORDER BY v)` —
     * a corpus-wide single-partition window. This plan uses the
-    * two-pass zipWithIndex shape instead ([[Ids.idsContiguous]]'s
-    * discipline on the VALUE census): range-partition the per-value
-    * census, partition-local running sums via one imperative fold,
-    * P-row offset table (metadata scale) broadcast back. The census
+    * two-pass zipWithIndex shape instead ([[TwoPass.cumsum]] on the
+    * VALUE census): the per-value census bucketed on sampled key
+    * bounds, within-bucket running sums, P-row offset table (metadata
+    * scale) broadcast back. The census
     * is ≤ |distinct values| rows — already a reduction — and every
     * stage partial-aggs before shuffling. */
   def statsKs(spark: SparkSession, sfDir: String): DataFrame = {
@@ -837,7 +837,7 @@ object Quality {
     *
     * Scale posture: ONE corpus scan folds to the joint (quantity,
     * cents) PAIR census; both marginal censuses derive from it (no
-    * second scan), TwoPass range-partitioned cumsums rank the
+    * second scan), TwoPass bucketed cumsums rank the
     * marginals (no corpus-wide window anywhere), and the rank joins +
     * count-weighted moment pass all run at census scale — corpus size
     * enters only through the first aggregation. */

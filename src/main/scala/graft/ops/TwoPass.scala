@@ -5,85 +5,81 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-/** Distributed PREFIX SUMS without a corpus-wide window — the shared
+/** Distributed PREFIX SUMS without a corpus-wide window — the one
   * machinery behind every global running total in this repo (KS CDFs,
-  * the sweep-line concurrency net, byte-offset sharding). The naive
-  * `sum() OVER (ORDER BY k)` collapses the relation into ONE task; the
-  * scalable shape is RDD `zipWithIndex`'s two-pass trick on the
-  * DataFrame API (the [[Ids.idsContiguous]] discipline generalized to
-  * arbitrary long-sum columns):
+  * the sweep-line concurrency net, byte-offset sharding, contiguous
+  * ids). The naive `sum() OVER (ORDER BY k)` collapses the relation
+  * into ONE task; the scalable shape is RDD `zipWithIndex`'s two-pass
+  * trick on the DataFrame API, with each row's bucket a PURE FUNCTION
+  * of its key:
   *
-  *   1. range-partition + sort by the key → P sorted runs;
-  *   2. partition-local running sums (one codegen'd stateful
-  *      expression per column — round 14: previously a whole-Row
-  *      `mapPartitions` fold, whose Deserialize/Serialize pair broke
-  *      whole-stage codegen in the middle of 12 consumer keys; see
-  *      [[graft.functions.RunningLongSum]]);
-  *   3. per-partition TOTALS → exclusive prefix offsets (P rows —
-  *      metadata scale, so the single-partition window over it is
-  *      free);
+  *   1. the max key of each of P range partitions, sampled ONCE (one
+  *      job of ≤ P rows) and inlined as literals;
+  *      `__b = #{bounds < key}`;
+  *   2. within-bucket running sums: the built-in
+  *      `sum() OVER (PARTITION BY __b ORDER BY key)` on one hash
+  *      exchange of the rows;
+  *   3. per-bucket TOTALS from a partial aggregate of the bucketed
+  *      input → exclusive prefix offsets (P rows — metadata scale, so
+  *      the unpartitioned window over them is free);
   *   4. broadcast the offsets back: cum = local + offset.
   *
-  * The cumulative values depend only on the TOTAL ORDER of the key —
-  * never on sampled range boundaries or partition count — so results
-  * are layout-invariant (the consumers are pinned in
+  * `__b` never decreases as the key grows, so `cum` is the running sum
+  * within the bucket plus the totals of every earlier bucket for ANY
+  * bounds — bad bounds cost parallelism, never exactness. And since
+  * the bounds are literals, every execution and every task retry
+  * assigns the same bucket: no checkpoint pins an execution (a range
+  * exchange re-samples its bounds per execution, so the two consumers
+  * of a range-partitioned relation could disagree on partition ids).
+  * Results depend only on the TOTAL ORDER of the key, never on the
+  * partition count (the consumers are pinned in
   * PartitionInvarianceSpec; OpsRound21Spec pins this formulation
   * against a plain `sum() OVER (ORDER BY k)` running sum).
   */
 private[graft] object TwoPass {
 
   /** `df` + one `cum_<c>` INCLUSIVE running-sum column per `sumCols`
-    * entry (all LongType), ordered by `orderCol`. Callers must
-    * pre-aggregate to ONE ROW PER KEY (every consumer here does — the
-    * census IS the reduction), so within-key order cannot matter. */
+    * entry (all LongType; nulls add nothing), ordered by `orderCol`
+    * (any orderable type). Callers must pre-aggregate to ONE ROW PER
+    * KEY (every consumer here does — the census IS the reduction), so
+    * within-key order cannot matter. */
   def cumsum(df: DataFrame, orderCol: String, sumCols: Seq[String],
       nParts: Int = 8): DataFrame = {
-    val spark = df.sparkSession
-    val withPid = df
-      .repartitionByRange(nParts, col(orderCol))
-      .sortWithinPartitions(col(orderCol))
-      .withColumn("__pid", spark_partition_id())
-    require(sumCols.forall(c => withPid.columns.contains(c)),
-      s"missing sum column in ${withPid.columns.toSeq}")
-    require(sumCols.forall(c => withPid.schema(c).dataType == LongType),
+    require(sumCols.forall(c => df.columns.contains(c)),
+      s"missing sum column in ${df.columns.toSeq}")
+    require(sumCols.forall(c => df.schema(c).dataType == LongType),
       "cumsum columns must be LongType")
-    // partition-local running sums INSIDE the codegen'd pipeline: the
-    // stateful expression evaluates once per row in the sorted order
-    // the sort above establishes (its nondeterministic marking fences
-    // every optimizer rule that could reorder or duplicate it)
-    val piped = sumCols.foldLeft(withPid) { (d, c) =>
-      d.withColumn(s"__l_$c",
-        graft.functions.RunningSum.runningSumLong(spark)(col(c)))
+    val key = col(orderCol)
+    // the max key of each range partition, in no order: a count of
+    // bounds below the key needs none, and the global max is below no
+    // key. Only the key column is shuffled, but the input runs once
+    // more for it: a census dearer than its last exchange pays twice.
+    val bounds = df.select(key.as("__k"))
+      .repartitionByRange(nParts, col("__k"))
+      .groupBy(spark_partition_id()).agg(max(col("__k")))
+      .collect().map(_.get(1)).filter(_ != null)
+    val bucketed = df.withColumn("__b", bounds
+      .map(b => when(key > lit(b), 1).otherwise(0))
+      .foldLeft(lit(0))(_ + _))
+    val within = Window.partitionBy(col("__b")).orderBy(key)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val local = sumCols.foldLeft(bucketed) { (d, c) =>
+      d.withColumn(s"__l_$c", coalesce(sum(col(c)).over(within), lit(0L)))
     }
-    // TRUNCATE before fanning out to the two consumers (totals + the
-    // offset join). `piped` is consumed twice, and the range exchange's
-    // partition boundaries are SAMPLED per execution: the retired
-    // Row-fold was an opaque barrier that kept both consumer subtrees
-    // byte-identical, so AQE always reused ONE exchange and the
-    // __pid ↔ offset agreement held by accident. The codegen'd pipeline
-    // is transparent — column pruning specializes the two branches into
-    // DIFFERENT exchange subtrees whose independently sampled
-    // boundaries can disagree, which mis-keys every offset (measured:
-    // q_intervals_concurrency flipped answers run-to-run at sf0.01
-    // until this checkpoint). Materializing the census-sized relation
-    // once makes the partitioning single-execution by construction —
-    // and is what the 100 TB shape does anyway (compute the pass-2
-    // relation once, attach offsets to the materialized result).
-    val local = graft.Tables.truncate(piped)
-    // P rows of per-partition totals → exclusive prefix offsets; the
-    // unpartitioned window spans partition-count rows, not data
-    val totals = local.groupBy(col("__pid"))
+    // P rows of per-bucket totals → exclusive prefix offsets; the
+    // unpartitioned window spans bucket-count rows, not data
+    val totals = bucketed.groupBy(col("__b"))
       .agg(sum(col(sumCols.head)).as(s"__t_${sumCols.head}"),
         sumCols.tail.map(c => sum(col(c)).as(s"__t_$c")): _*)
-    val w = Window.orderBy(col("__pid"))
+    val before = Window.orderBy(col("__b"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = sumCols.foldLeft(totals) { (d, c) =>
       d.withColumn(s"__o_$c",
-        coalesce(sum(col(s"__t_$c")).over(w), lit(0L)))
-    }.select(col("__pid") +: sumCols.map(c => col(s"__o_$c")): _*)
-    val joined = local.join(broadcast(offsets), "__pid")
+        coalesce(sum(col(s"__t_$c")).over(before), lit(0L)))
+    }.select(col("__b") +: sumCols.map(c => col(s"__o_$c")): _*)
+    val joined = local.join(broadcast(offsets), "__b")
     sumCols.foldLeft(joined) { (d, c) =>
       d.withColumn(s"cum_$c", col(s"__l_$c") + col(s"__o_$c"))
-    }.drop("__pid" +: sumCols.flatMap(c => Seq(s"__l_$c", s"__o_$c")): _*)
+    }.drop("__b" +: sumCols.flatMap(c => Seq(s"__l_$c", s"__o_$c")): _*)
   }
 }

@@ -31,6 +31,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    sequential by definition.
   *  - Sources.deleteCompact — flagged file-group ids, O(file groups),
   *    the same driver-side planning every table-format compactor does.
+  *  - TwoPass.cumsum — the ≤ nParts range-bound keys, sampled once and
+  *    inlined as literals so each row's bucket is a function of its key.
   *
   * Harness files (measurement/CLI, not engine dataflow) are exempt by
   * name: Omits (omit measurements), Query (CLI printer, limit-bounded),
@@ -41,6 +43,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Session.local`, so `SparkSession.builder()` appears in `src/main`
   * only in Session.scala — a second builder is a copy of the policy
   * that drifts from it.
+  *
+  * Prefix-sum policy: a global running total goes through
+  * `TwoPass.cumsum`, so `spark_partition_id` and `repartitionByRange`
+  * appear in `src/main` only in TwoPass.scala — a second copy of the
+  * two-pass trick is a second place for its exactness to break.
   *
   * Referee policy: a `private[graft]` def or val that no `src/main`
   * code reaches is a formulation only tests run — it belongs in
@@ -76,7 +83,8 @@ class LintSpec extends AnyFunSuite {
     // class as dedupEdit's max(length)
     ("DesFiles.scala", "hierarchySrclistDoubling") -> 1,
     ("Eval.scala", "simRerankMmr") -> 1,
-    ("Sources.scala", "deleteCompact") -> 1)
+    ("Sources.scala", "deleteCompact") -> 1,
+    ("TwoPass.scala", "cumsum") -> 1)
 
   private val harnessExempt = Set("Omits.scala", "Query.scala", "Scale.scala")
 
@@ -152,6 +160,22 @@ class LintSpec extends AnyFunSuite {
       "build sessions through Session.local, not a new builder:\n" +
         outside.mkString("\n"))
     assert(sites.nonEmpty, "Session.scala no longer builds the session")
+  }
+
+  test("spark_partition_id and repartitionByRange appear in src/main" +
+    " only in TwoPass.scala") {
+    val sites = scalaFiles(new java.io.File("src/main")).flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f.toPath)
+      (0 until lines.size()).collect {
+        case i if Seq("spark_partition_id", "repartitionByRange")
+            .exists(lines.get(i).contains) => s"${f.getPath}:${i + 1}"
+      }
+    }
+    val outside = sites.filterNot(_.contains("/TwoPass.scala:"))
+    assert(outside.isEmpty,
+      "take global running totals through TwoPass.cumsum:\n" +
+        outside.mkString("\n"))
+    assert(sites.nonEmpty, "TwoPass.scala no longer samples its bounds")
   }
 
   test("every private[graft] def/val in src/main is reached from src/main") {

@@ -85,6 +85,22 @@ class MemoSpec extends SparkSpec {
     assert(built.last.schema.fieldNames.toSeq === Seq(s"c${Memo.MaxEntries}"))
   }
 
+  test("a build's seconds leave out the memo builds nested in it") {
+    val builds = Memo.trackBuilds()
+    val t0 = System.nanoTime()
+    Memo.parquet(spark, corpus, "spec-outer") {
+      Memo.parquet(spark, corpus, "spec-inner") {
+        Thread.sleep(1500)
+        spark.range(2).toDF("i")
+      }.toDF("o")
+    }
+    val wall = (System.nanoTime() - t0) / 1e9
+    val secs = builds().toMap
+    assert(secs.keySet === Set("spec-outer", "spec-inner"))
+    assert(secs("spec-inner") >= 1.5)
+    assert(secs("spec-outer") + secs("spec-inner") <= wall, s"$secs vs $wall s")
+  }
+
   test("trackBuilds reports only the builds run after it") {
     // a warmup pass over the SAME corpus builds first; the tracked
     // phase then hits that artifact and builds one new kind

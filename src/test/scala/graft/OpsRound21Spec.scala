@@ -13,12 +13,13 @@ import org.apache.spark.sql.functions._
   *    corpus artifact (ctp-census) vs the inline per-execution census
   *    it replaces (VERDICT r13 #2) — both the final pair set and the
   *    census relation itself.
-  *  - TwoPass.cumsum: the codegen'd RunningLongSum pass-2 (VERDICT r13
-  *    #3, replacing a whole-Row mapPartitions fold) vs a plain
-  *    `sum() OVER (ORDER BY k)` running sum — a referee independent of
-  *    the range-partition/offset logic — across partition counts and
-  *    multi-column sums, plus the plan-shape pin that the serde pair is
-  *    gone.
+  *  - TwoPass.cumsum: running sums within key buckets that are a pure
+  *    function of the key (so no checkpoint pins an execution) vs a
+  *    plain `sum() OVER (ORDER BY k)` running sum — a referee
+  *    independent of the bucket/offset logic — across partition counts,
+  *    multi-column sums, a string key and an empty input, plus the
+  *    plan-shape pin: no checkpoint, no serde pair, one bucket-
+  *    partitioned running-sum window and one P-row offsets window.
   */
 class OpsRound21Spec extends SparkSpec {
   import spark.implicits._
@@ -63,21 +64,42 @@ class OpsRound21Spec extends SparkSpec {
       .withColumn("b", (xxhash64($"k", lit(7)) % 50L) * (xxhash64($"k") % 3L))
   }
 
+  /** q_quality_ccnet's census shape: one row per string (lang, score)
+    * key, built the way that key builds its composite `sk`. */
+  private def stringKeyedWorkload(n: Int) = {
+    val langs = array(Seq("de", "en", "zh", "zh-tw").map(lit): _*)
+    cumsumWorkload(n)
+      .select(element_at(langs, (pmod($"k", lit(4L)) + 1).cast("int"))
+        .as("lang"), ($"a" * 7L).as("nlp"))
+      .groupBy($"lang", $"nlp").agg(count(lit(1)).as("a"))
+      .withColumn("b", $"nlp")
+      .withColumn("k", concat($"lang", lit("\u0001"),
+        when($"nlp" >= 0, concat(lit("1"), lpad($"nlp".cast("string"), 14, "0")))
+          .otherwise(concat(lit("0"),
+            lpad(($"nlp" + lit(100000000000000L)).cast("string"), 14, "0")))))
+  }
+
   test("TwoPass.cumsum: codegen'd running sum equals a plain window" +
     " running sum across partition counts and sum columns") {
-    val w = org.apache.spark.sql.expressions.Window.orderBy($"k")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val ref = cumsumWorkload(5000)
-      .select($"k", sum($"a").over(w), sum($"b").over(w))
-      .as[(Long, Long, Long)].collect().toSeq.sortBy(_._1)
-    for (nParts <- Seq(1, 3, 8)) {
-      val got = ops.TwoPass.cumsum(cumsumWorkload(5000), "k",
-          Seq("a", "b"), nParts)
-        .select($"k", $"cum_a", $"cum_b")
-        .as[(Long, Long, Long)].collect().toSeq.sortBy(_._1)
-      assert(got === ref, s"nParts=$nParts")
-      assert(got.size === 5000)
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.orderBy($"k")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val workloads = Seq(
+      ("long key", () => cumsumWorkload(5000), (n: Int) => n == 5000),
+      ("string key (ccnet census)", () => stringKeyedWorkload(5000),
+        (n: Int) => n > 1000),
+      ("empty input", () => cumsumWorkload(5000).where(lit(false)),
+        (n: Int) => n == 0))
+    for ((name, df, sized) <- workloads) {
+      val ref = rows(df().select($"k", sum($"a").over(w), sum($"b").over(w)))
+      assert(sized(ref.size), s"$name: ${ref.size} rows")
+      for (nParts <- Seq(1, 3, 8)) {
+        val got = rows(ops.TwoPass.cumsum(df(), "k", Seq("a", "b"), nParts)
+          .select($"k", $"cum_a", $"cum_b"))
+        assert(got === ref, s"$name, nParts=$nParts")
+      }
     }
   }
 
@@ -85,17 +107,10 @@ class OpsRound21Spec extends SparkSpec {
     " from the executed plan") {
     val (df, truncated) = truncatedPlans(
       ops.TwoPass.cumsum(cumsumWorkload(1000), "k", Seq("a")))
-    val plan = finalPlan(df)
-    // the running sum executes in the pre-truncate plan (the
-    // checkpoint's own execution); the outer plan only attaches offsets
-    assert(truncated.size === 1, truncated.mkString("\n"))
-    val pass2 = truncated.head
-    assert(pass2.contains("running_sum_long"), pass2.take(1200))
-    assert(!plan.contains("running_sum_long"), plan.take(1200))
-    for (p <- Seq(pass2, plan)) {
-      assert(!p.contains("DeserializeToObject"), p.take(1200))
-      assert(!p.contains("SerializeFromObject"), p.take(1200))
-    }
+    // the bucket is a pure function of the key: nothing is pinned by
+    // a checkpoint, so the whole prefix sum runs in the final plan
+    assert(truncated.isEmpty, truncated.mkString("\n"))
+    assertTwoPassShape(df, finalPlan(df))
   }
 
   test("TwoPass.cumsum: running sums are exact on a real consumer" +

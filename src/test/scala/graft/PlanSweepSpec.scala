@@ -90,7 +90,7 @@ class PlanSweepSpec extends SparkSpec
     * read against its source before being admitted (round 11). */
   private val globalWindowAllowed: Set[String] = Set(
     // TwoPass.cumsum consumers: the unpartitioned window spans the
-    // P-row (= range-partition count) per-partition totals only —
+    // P-row (= key-bucket count) per-bucket totals only —
     // TwoPass.scala's offsets stage, metadata scale by construction
     "q_stats_ks", "q_stats_kruskal", "q_stats_mannwhitney",
     "q_stats_spearman", "q_stats_gini", "q_stats_auc", "q_eval_pr_auc",
@@ -117,20 +117,9 @@ class PlanSweepSpec extends SparkSpec
         assert(!plan.contains("BroadcastNestedLoopJoin"),
           s"unexpected BNL in $name:\n${plan.take(600)}")
       }
-      // unpartitioned-window sweep: walk the executed tree (through
-      // AQE stage wrappers) and flag any WindowExec with an empty
+      // unpartitioned-window sweep: flag any WindowExec with an empty
       // partition spec outside the documented metadata-scale sites
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      import org.apache.spark.sql.execution.window.WindowExec
-      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-        case q: QueryStageExec => nodes(q.plan)
-        case o => o.children.flatMap(nodes)
-      })
-      val global = nodes(df.queryExecution.executedPlan).collect {
-        case w: WindowExec if w.partitionSpec.isEmpty => w
-      }
+      val global = windowExecs(df).filter(_.partitionSpec.isEmpty)
       ranKeys += name
       if (global.nonEmpty) sawGlobal += name
       if (!globalWindowAllowed(name)) {

@@ -27,6 +27,40 @@ trait SparkSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  /** Every WindowExec in `df`'s executed plan, walked through the AQE
+    * stage wrappers (run `df` first to see the final plan's). */
+  def windowExecs(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.window.WindowExec] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case o => o.children.flatMap(nodes)
+    })
+    nodes(df.queryExecution.executedPlan).collect { case w: WindowExec => w }
+  }
+
+  /** TwoPass.cumsum's executed shape in `df` (whose final plan string
+    * is `plan`): no Row-encoder serde pair, no partition-id column, and
+    * two windows only — one running sum partitioned by the key bucket
+    * `__b`, one unpartitioned window over the P-row per-bucket totals,
+    * ordered by `__b`. */
+  def assertTwoPassShape(df: org.apache.spark.sql.DataFrame,
+      plan: String): Unit = {
+    for (s <- Seq("DeserializeToObject", "SerializeFromObject",
+        "spark_partition_id"))
+      assert(!plan.contains(s), s"$s in:\n${plan.take(1500)}")
+    val (global, partitioned) = windowExecs(df).partition(_.partitionSpec.isEmpty)
+    def names(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      es.flatMap(_.references.map(_.name))
+    assert(global.map(w => names(w.orderSpec)) === Seq(Seq("__b")),
+      s"expected only the P-row offsets window unpartitioned:\n${plan.take(1500)}")
+    assert(partitioned.map(w => names(w.partitionSpec)) === Seq(Seq("__b")),
+      s"expected one running-sum window partitioned by __b:\n${plan.take(1500)}")
+  }
+
   /** `body`'s result plus the executed plans of the checkpoint actions
     * it ran while building it. [[Tables.truncate]] materializes
     * eagerly, so a truncated subtree never appears in the consumer's
