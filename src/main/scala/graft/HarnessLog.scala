@@ -24,9 +24,9 @@ object HarnessLog {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
     // WindowExec's "No Partition Defined" warning fires for every
-    // DELIBERATE metadata-scale window in the repo (TwoPass's P-row
-    // offset ranks, domain-bounded tie censuses — all documented, all
-    // bounded by partition count or value domain, never data-sized).
+    // DELIBERATE metadata-scale window in the repo (domain-bounded
+    // tie censuses, k-row tops — all documented, all bounded by a
+    // value domain or k, never data-sized).
     // The unpartitioned-window-over-DATA regression this warning
     // exists for is gated structurally by PlanSweepSpec's
     // unpartitioned-window allowlist (every global Window in a

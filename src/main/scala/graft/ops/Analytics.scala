@@ -880,8 +880,8 @@ object Analytics {
     * Scale posture: the corpus-sized pass is ONE partial-agged groupBy
     * (lineitem → part dimension); ranking and the running sum operate
     * on the CATALOG dimension (the justified place — at extreme
-    * catalog sizes the running sum becomes the two-pass range-
-    * partition + offset shape of q_ids_contiguous); the grand total is
+    * catalog sizes the running sum becomes [[TwoPass.cumsum]], the
+    * shape of q_ids_contiguous); the grand total is
     * a 1-row broadcast. The share quotient divides exact decimal sums
     * cast to double — identical operands, identical IEEE quotient in
     * both engines; class boundaries compare those identical doubles. */
@@ -1183,8 +1183,8 @@ object Analytics {
     * Scale posture: the naive sweep is `sum(±1) OVER (ORDER BY ts)` —
     * a corpus-wide single-partition window. This runs the same
     * TWO-PASS cumsum as q_stats_ks (the per-timestamp census bucketed
-    * on sampled bounds, within-bucket running net, P-row offset table
-    * broadcast back); the per-day argmax window
+    * on sampled key bounds, within-bucket running net plus the
+    * bucket's offset); the per-day argmax window
     * partitions on the calendar day — bounded. The census is
     * ≤ 2·|sessions| rows, already reduced from the event stream. */
   def intervalsConcurrency(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1200,11 +1200,14 @@ object Analytics {
       .withColumn("sid", sum($"new_session").over(w))
     val iv = marked.groupBy($"user_id", $"sid")
       .agg(min($"tus").as("s_us"), max($"tus").as("e_us"))
-    val census = iv.select($"s_us".as("tus"), lit(1L).as("st"),
-        lit(0L).as("en"))
-      .unionAll(iv.select($"e_us".as("tus"), lit(0L).as("st"),
-        lit(1L).as("en")))
-      .groupBy($"tus").agg(sum($"st").as("s"), sum($"en").as("e"))
+    // one start and one end per session, from ONE pass over the
+    // sessions (a union of two selects would sessionize twice)
+    val census = iv.select(explode(array(
+        struct($"s_us".as("tus"), lit(1L).as("st"), lit(0L).as("en")),
+        struct($"e_us".as("tus"), lit(0L).as("st"), lit(1L).as("en"))))
+        .as("x"))
+      .groupBy($"x.tus".as("tus"))
+      .agg(sum($"x.st").as("s"), sum($"x.en").as("e"))
     val peaks = TwoPass.cumsum(
         census.withColumn("net", $"s" - $"e"), "tus", Seq("net"))
       // peak while ts applies = net-before + starts = net-after + ends
@@ -1310,8 +1313,9 @@ object Analytics {
       .withColumn("neg", -$"cnt")
       .withColumn("ev", $"cnt" * $"nu")
     val cum = TwoPass.cumsum(census, "neg", Seq("nu", "ev"))
-    val tot = cum.agg(max($"cum_nu").as("n_users"),
-      max($"cum_ev").as("total_events"))
+    // the totals are the census sums, so the cumsum is read once
+    val tot = census.agg(sum($"nu").as("n_users"),
+      sum($"ev").as("total_events"))
     // decile size k = max(1, floor(n/10)) — clamped so the boundary
     // filter stays satisfiable below 10 users (k=0 made it vacuous and
     // the result silently empty); the block CONTAINING rank k is the

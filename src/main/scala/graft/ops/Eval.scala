@@ -333,7 +333,7 @@ object Eval {
     *
     * Scale posture: census partial-aggs to one row per distinct
     * score; the descending running totals ride [[TwoPass.cumsum]]
-    * (within-bucket running sums + P-row offset broadcast), never a
+    * (within-bucket running sums + per-bucket offsets), never a
     * single-task global window; the fold is a scalar agg. */
   def evalPrAuc(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._

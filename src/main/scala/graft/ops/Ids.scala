@@ -11,9 +11,8 @@ import org.apache.spark.sql.functions._
   * The naive formulation — `row_number() OVER (ORDER BY key)` — is a
   * scale-killer: an empty-partition window collapses the ENTIRE corpus
   * into one task. The scalable shape is a prefix sum of 1 over the key
-  * order, so it is [[TwoPass.cumsum]]: rows bucketed on key bounds
-  * sampled once, within-bucket running counts, P-row bucket offsets
-  * broadcast back.
+  * order, so it is [[TwoPass.cumsum]]: rows bucketed on sampled key
+  * bounds, within-bucket running counts plus per-bucket offsets.
   *
   * The assigned ids depend ONLY on the total order of the (unique) key
   * — never on the sampled bounds or the partition count — so the

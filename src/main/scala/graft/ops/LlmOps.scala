@@ -4229,8 +4229,8 @@ object LlmOps {
     * be i.i.d. rather than id-contiguous — the manifest math is
     * order-agnostic.
     *
-    * Scale posture: one bucketed within-bucket running sum + P-row
-    * offset broadcast (the zipWithIndex discipline); the manifest
+    * Scale posture: one within-bucket running sum + per-bucket
+    * offsets (the zipWithIndex discipline); the manifest
     * rollup partial-aggs on shard_id. */
   def shardManifest(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._

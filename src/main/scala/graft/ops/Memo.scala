@@ -115,15 +115,14 @@ private[graft] object Memo {
       val outer = nestedSeconds.get
       nestedSeconds.set(0.0)
       val t0 = System.nanoTime()
-      try {
+      val built = try {
         build.write.mode("overwrite").parquet(out.toString)
         buildSeconds.merge(s"$kind@$sfDir",
           (System.nanoTime() - t0) / 1e9 - nestedSeconds.get, (a, b) => a + b)
+        // the one schema inference this artifact ever pays — outside
+        // its own build_s, and inside what an enclosing build leaves out
+        Entry(out.toString, spark.read.parquet(out.toString).schema, hook)
       } finally nestedSeconds.set(outer + (System.nanoTime() - t0) / 1e9)
-      // the one schema inference this artifact ever pays — outside the
-      // build timer, so build_s keeps meaning the build alone
-      val built = Entry(out.toString,
-        spark.read.parquet(out.toString).schema, hook)
       entries.synchronized {
         val raced = entries.get(k)
         if (raced != null) {

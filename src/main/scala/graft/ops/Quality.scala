@@ -398,7 +398,7 @@ object Quality {
     *
     * Scale posture: the census partial-aggs map-side to one row per
     * distinct score; the running total uses [[TwoPass.cumsum]]
-    * (within-bucket running sums + P-row offset broadcast), never
+    * (within-bucket running sums + per-bucket offsets), never
     * a corpus-wide `sum() OVER (ORDER BY …)` single-task window; the
     * final fold is a partial-agged scalar. Ties across documents
     * collapse into one census row, so tie handling is exact, not
@@ -576,10 +576,9 @@ object Quality {
     * a corpus-wide single-partition window. This plan uses the
     * two-pass zipWithIndex shape instead ([[TwoPass.cumsum]] on the
     * VALUE census): the per-value census bucketed on sampled key
-    * bounds, within-bucket running sums, P-row offset table (metadata
-    * scale) broadcast back. The census
-    * is ≤ |distinct values| rows — already a reduction — and every
-    * stage partial-aggs before shuffling. */
+    * bounds, within-bucket running sums plus per-bucket offsets. The
+    * census is ≤ |distinct values| rows — already a reduction — and
+    * every stage partial-aggs before shuffling. */
   def statsKs(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val census = Tables(spark, sfDir, "orders")
@@ -588,16 +587,17 @@ object Quality {
       .groupBy($"cents")
       .agg(count(when($"is_a", 1)).as("da"),
         count(when(!$"is_a", 1)).as("db"))
-    val cum = TwoPass.cumsum(census, "cents", Seq("da", "db"))
-      .select($"cents", $"cum_da".as("ca"), $"cum_db".as("cb"))
-    val tot = cum.agg(max($"ca").as("na"), max($"cb").as("nb"))
-    val gaps = cum.crossJoin(broadcast(tot))
-      .select($"cents", $"na", $"nb",
-        abs($"ca" * $"nb" - $"cb" * $"na").as("gap"))
-    val mx = gaps.agg(max($"gap").as("max_gap"))
-    gaps.join(broadcast(mx), $"gap" === $"max_gap")
-      .groupBy($"na", $"nb", $"max_gap")
-      .agg(min($"cents").as("at_cents"))
+    // the totals are the census sums, and the widest gap with the
+    // least value at it is the max of (gap, −cents): the cumsum is
+    // read once
+    val tot = census.agg(sum($"da").as("na"), sum($"db").as("nb"))
+    TwoPass.cumsum(census, "cents", Seq("da", "db"))
+      .crossJoin(broadcast(tot))
+      .groupBy($"na", $"nb")
+      .agg(max(struct(abs($"cum_da" * $"nb" - $"cum_db" * $"na").as("gap"),
+        (-$"cents").as("neg"))).as("m"))
+      .select($"na", $"nb", $"m.gap".as("max_gap"),
+        (-$"m.neg").as("at_cents"))
       .select($"na".as("n_a"), $"nb".as("n_b"),
         ($"max_gap".cast("double")
           / ($"na" * $"nb").cast("double")).as("ks_d"),

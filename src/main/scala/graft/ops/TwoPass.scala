@@ -10,31 +10,31 @@ import org.apache.spark.sql.types.LongType
   * the sweep-line concurrency net, byte-offset sharding, contiguous
   * ids). The naive `sum() OVER (ORDER BY k)` collapses the relation
   * into ONE task; the scalable shape is RDD `zipWithIndex`'s two-pass
-  * trick on the DataFrame API, with each row's bucket a PURE FUNCTION
-  * of its key:
+  * trick on the DataFrame API, in ONE plan:
   *
-  *   1. the max key of each of P range partitions, sampled ONCE (one
-  *      job of ≤ P rows) and inlined as literals;
-  *      `__b = #{bounds < key}`;
-  *   2. within-bucket running sums: the built-in
+  *   1. a scalar subquery range-partitions the key and sum columns
+  *      into P partitions and returns, in partition (= key) order,
+  *      each partition's max key and the exclusive prefix of the
+  *      partitions' totals — one row of ≤ P entries;
+  *   2. a row's bucket `__b` counts the partitions wholly below its
+  *      key, and its offset is the prefix at `__b`;
+  *   3. within-bucket running sums: the built-in
   *      `sum() OVER (PARTITION BY __b ORDER BY key)` on one hash
-  *      exchange of the rows;
-  *   3. per-bucket TOTALS from a partial aggregate of the bucketed
-  *      input → exclusive prefix offsets (P rows — metadata scale, so
-  *      the unpartitioned window over them is free);
-  *   4. broadcast the offsets back: cum = local + offset.
+  *      exchange of the rows, plus the offset.
   *
-  * `__b` never decreases as the key grows, so `cum` is the running sum
-  * within the bucket plus the totals of every earlier bucket for ANY
-  * bounds — bad bounds cost parallelism, never exactness. And since
-  * the bounds are literals, every execution and every task retry
-  * assigns the same bucket: no checkpoint pins an execution (a range
-  * exchange re-samples its bounds per execution, so the two consumers
-  * of a range-partitioned relation could disagree on partition ids).
-  * Results depend only on the TOTAL ORDER of the key, never on the
-  * partition count (the consumers are pinned in
-  * PartitionInvarianceSpec; OpsRound21Spec pins this formulation
-  * against a plain `sum() OVER (ORDER BY k)` running sum).
+  * A range partition holds every row of its keys, so bucket i holds
+  * exactly the rows of the i-th partition and its offset is the total
+  * of the buckets before it. The subquery runs once per execution and
+  * every task of that execution, retries included, reads the same
+  * value, so buckets and offsets agree; another execution may draw
+  * other bounds, which moves work between tasks, never a sum. No
+  * checkpoint pins an execution (the retired form keyed offsets on a
+  * range exchange's partition ids, which two consumers could sample
+  * differently), and under AQE the subquery reuses the input's
+  * exchanges, so those shuffles run once. Results depend only on the
+  * TOTAL ORDER of the key, never on the partition count (the consumers
+  * are pinned in PartitionInvarianceSpec; OpsRound21Spec pins this
+  * formulation against a plain `sum() OVER (ORDER BY k)` running sum).
   */
 private[graft] object TwoPass {
 
@@ -42,7 +42,8 @@ private[graft] object TwoPass {
     * entry (all LongType; nulls add nothing), ordered by `orderCol`
     * (any orderable type). Callers must pre-aggregate to ONE ROW PER
     * KEY (every consumer here does — the census IS the reduction), so
-    * within-key order cannot matter. */
+    * within-key order cannot matter; `df` must be deterministic, as
+    * the subquery and the main branch each read it. */
   def cumsum(df: DataFrame, orderCol: String, sumCols: Seq[String],
       nParts: Int = 8): DataFrame = {
     require(sumCols.forall(c => df.columns.contains(c)),
@@ -50,36 +51,37 @@ private[graft] object TwoPass {
     require(sumCols.forall(c => df.schema(c).dataType == LongType),
       "cumsum columns must be LongType")
     val key = col(orderCol)
-    // the max key of each range partition, in no order: a count of
-    // bounds below the key needs none, and the global max is below no
-    // key. Only the key column is shuffled, but the input runs once
-    // more for it: a census dearer than its last exchange pays twice.
-    val bounds = df.select(key.as("__k"))
+    // per non-empty range partition, by partition id: max key, then
+    // one exclusive prefix of the totals per sum column
+    val ts = sumCols.indices.map(j => s"t$j")
+    val parts = df.select(key.as("__k") +: sumCols.map(col): _*)
       .repartitionByRange(nParts, col("__k"))
-      .groupBy(spark_partition_id()).agg(max(col("__k")))
-      .collect().map(_.get(1)).filter(_ != null)
-    val bucketed = df.withColumn("__b", bounds
-      .map(b => when(key > lit(b), 1).otherwise(0))
-      .foldLeft(lit(0))(_ + _))
+      .groupBy(spark_partition_id().as("p"))
+      .agg(max(col("__k")).as("m"), sumCols.indices.map(j =>
+        coalesce(sum(col(sumCols(j))), lit(0L)).as(ts(j))): _*)
+      .agg(sort_array(collect_list(struct("p", "m" +: ts: _*))).as("s"))
+      .select(struct(col("s") +: ts.map { t =>
+        val tot = transform(col("s"), _(t))
+        transform(tot, (_, i) => aggregate(slice(tot, lit(1), i), lit(0L),
+          (a, x) => a + x)).as(t)
+      }: _*)).scalar()
+    // a row's bucket counts the partitions wholly below its key (nulls
+    // sort first, so a partition of nulls only is below every other
+    // key); its offsets are picked before the shuffle
+    val below = (0 until nParts).map { i =>
+      val p = get(col("__parts.s"), lit(i))
+      (p.isNotNull && coalesce(p("m") < key, key.isNotNull)).cast("int")
+    }
+    val tagged = df.withColumn("__parts", parts)
+      .withColumn("__b", below.reduce(_ + _))
+    val bucketed = ts.foldLeft(tagged)((d, t) => d.withColumn(s"__$t",
+      element_at(col(s"__parts.$t"), col("__b") + 1))).drop("__parts")
     val within = Window.partitionBy(col("__b")).orderBy(key)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = sumCols.foldLeft(bucketed) { (d, c) =>
-      d.withColumn(s"__l_$c", coalesce(sum(col(c)).over(within), lit(0L)))
-    }
-    // P rows of per-bucket totals → exclusive prefix offsets; the
-    // unpartitioned window spans bucket-count rows, not data
-    val totals = bucketed.groupBy(col("__b"))
-      .agg(sum(col(sumCols.head)).as(s"__t_${sumCols.head}"),
-        sumCols.tail.map(c => sum(col(c)).as(s"__t_$c")): _*)
-    val before = Window.orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sumCols.foldLeft(totals) { (d, c) =>
-      d.withColumn(s"__o_$c",
-        coalesce(sum(col(s"__t_$c")).over(before), lit(0L)))
-    }.select(col("__b") +: sumCols.map(c => col(s"__o_$c")): _*)
-    val joined = local.join(broadcast(offsets), "__b")
-    sumCols.foldLeft(joined) { (d, c) =>
-      d.withColumn(s"cum_$c", col(s"__l_$c") + col(s"__o_$c"))
-    }.drop("__b" +: sumCols.flatMap(c => Seq(s"__l_$c", s"__o_$c")): _*)
+    sumCols.indices.foldLeft(bucketed) { (d, j) =>
+      d.withColumn(s"cum_${sumCols(j)}",
+        coalesce(sum(col(sumCols(j))).over(within), lit(0L)) +
+          col(s"__${ts(j)}"))
+    }.drop("__b" +: ts.map("__" + _): _*)
   }
 }

@@ -31,8 +31,6 @@ import org.scalatest.funsuite.AnyFunSuite
   *    sequential by definition.
   *  - Sources.deleteCompact — flagged file-group ids, O(file groups),
   *    the same driver-side planning every table-format compactor does.
-  *  - TwoPass.cumsum — the ≤ nParts range-bound keys, sampled once and
-  *    inlined as literals so each row's bucket is a function of its key.
   *
   * Harness files (measurement/CLI, not engine dataflow) are exempt by
   * name: Omits (omit measurements), Query (CLI printer, limit-bounded),
@@ -83,8 +81,7 @@ class LintSpec extends AnyFunSuite {
     // class as dedupEdit's max(length)
     ("DesFiles.scala", "hierarchySrclistDoubling") -> 1,
     ("Eval.scala", "simRerankMmr") -> 1,
-    ("Sources.scala", "deleteCompact") -> 1,
-    ("TwoPass.scala", "cumsum") -> 1)
+    ("Sources.scala", "deleteCompact") -> 1)
 
   private val harnessExempt = Set("Omits.scala", "Query.scala", "Scale.scala")
 
@@ -175,7 +172,7 @@ class LintSpec extends AnyFunSuite {
     assert(outside.isEmpty,
       "take global running totals through TwoPass.cumsum:\n" +
         outside.mkString("\n"))
-    assert(sites.nonEmpty, "TwoPass.scala no longer samples its bounds")
+    assert(sites.nonEmpty, "TwoPass.scala no longer range-partitions")
   }
 
   test("every private[graft] def/val in src/main is reached from src/main") {

@@ -13,13 +13,14 @@ import org.apache.spark.sql.functions._
   *    corpus artifact (ctp-census) vs the inline per-execution census
   *    it replaces (VERDICT r13 #2) — both the final pair set and the
   *    census relation itself.
-  *  - TwoPass.cumsum: running sums within key buckets that are a pure
-  *    function of the key (so no checkpoint pins an execution) vs a
-  *    plain `sum() OVER (ORDER BY k)` running sum — a referee
-  *    independent of the bucket/offset logic — across partition counts,
-  *    multi-column sums, a string key and an empty input, plus the
-  *    plan-shape pin: no checkpoint, no serde pair, one bucket-
-  *    partitioned running-sum window and one P-row offsets window.
+  *  - TwoPass.cumsum: running sums within key buckets whose bounds and
+  *    offsets one scalar subquery computes per execution (so no
+  *    checkpoint pins an execution) vs a plain `sum() OVER (ORDER BY
+  *    k)` running sum — a referee independent of the bucket/offset
+  *    logic — across partition counts, multi-column sums, a string
+  *    key, null keys and sums and an empty input, plus the plan-shape
+  *    pin: no checkpoint, no serde pair, no unpartitioned window, one
+  *    bucket-partitioned running-sum window.
   */
 class OpsRound21Spec extends SparkSpec {
   import spark.implicits._
@@ -79,6 +80,11 @@ class OpsRound21Spec extends SparkSpec {
             lpad(($"nlp" + lit(100000000000000L)).cast("string"), 14, "0")))))
   }
 
+  /** The null key sorts first; null sums add nothing. */
+  private def withNulls(n: Int) = cumsumWorkload(n)
+    .withColumn("k", when($"k" =!= 0, $"k"))
+    .withColumn("b", when($"k" % 5 =!= 1, $"b"))
+
   test("TwoPass.cumsum: codegen'd running sum equals a plain window" +
     " running sum across partition counts and sum columns") {
     import org.apache.spark.sql.expressions.Window
@@ -91,9 +97,13 @@ class OpsRound21Spec extends SparkSpec {
       ("string key (ccnet census)", () => stringKeyedWorkload(5000),
         (n: Int) => n > 1000),
       ("empty input", () => cumsumWorkload(5000).where(lit(false)),
-        (n: Int) => n == 0))
+        (n: Int) => n == 0),
+      ("null key and null sums", () => withNulls(5000), (n: Int) => n == 5000),
+      // few rows: the null key gets a range partition of its own
+      ("null key, 3 rows", () => withNulls(3), (n: Int) => n == 3))
     for ((name, df, sized) <- workloads) {
-      val ref = rows(df().select($"k", sum($"a").over(w), sum($"b").over(w)))
+      val ref = rows(df().select($"k", coalesce(sum($"a").over(w), lit(0L)),
+        coalesce(sum($"b").over(w), lit(0L))))
       assert(sized(ref.size), s"$name: ${ref.size} rows")
       for (nParts <- Seq(1, 3, 8)) {
         val got = rows(ops.TwoPass.cumsum(df(), "k", Seq("a", "b"), nParts)

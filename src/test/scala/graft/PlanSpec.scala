@@ -512,16 +512,16 @@ class PlanSpec extends SparkSpec {
         plan.take(1500))
   }
 
-  test("auc: census partial-agged; offsets the one global window") {
+  test("auc: census partial-agged; no unpartitioned window") {
     val (df, truncated) =
       truncatedPlans(graft.ops.Quality.statsAuc(spark, sfDir))
-    // TwoPass.cumsum checkpoints nothing: the census, the running sum,
-    // the offsets and the AUC fold all execute in the final plan
+    // TwoPass.cumsum checkpoints nothing: the census, the running sum
+    // and the AUC fold all execute in the final plan
     assert(truncated.isEmpty, truncated.mkString("\n"))
     val plan = finalSection(finalPlan(df))
     // the distinct-score census must combine map-side, and the global
-    // cumsum must ride TwoPass (a running sum per key bucket plus the
-    // P-row offsets window, built-in windows, no Row-encoder fold), not
+    // cumsum must ride TwoPass (a running sum per key bucket plus its
+    // literal offset, a built-in window, no Row-encoder fold), not
     // a corpus-wide `ORDER BY score` window over the census rows
     assert("HashAggregate\\(keys=\\[score#\\d+\\]".r.findAllIn(plan).size >= 2,
       plan.take(1500))

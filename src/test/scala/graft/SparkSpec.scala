@@ -43,22 +43,18 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   /** TwoPass.cumsum's executed shape in `df` (whose final plan string
-    * is `plan`): no Row-encoder serde pair, no partition-id column, and
-    * two windows only — one running sum partitioned by the key bucket
-    * `__b`, one unpartitioned window over the P-row per-bucket totals,
-    * ordered by `__b`. */
+    * is `plan`): no Row-encoder serde pair, no partition-id column, no
+    * unpartitioned window (the bucket offsets are literals), and one
+    * window only — the running sum partitioned by the key bucket
+    * `__b`. */
   def assertTwoPassShape(df: org.apache.spark.sql.DataFrame,
       plan: String): Unit = {
     for (s <- Seq("DeserializeToObject", "SerializeFromObject",
         "spark_partition_id"))
       assert(!plan.contains(s), s"$s in:\n${plan.take(1500)}")
-    val (global, partitioned) = windowExecs(df).partition(_.partitionSpec.isEmpty)
-    def names(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
-      es.flatMap(_.references.map(_.name))
-    assert(global.map(w => names(w.orderSpec)) === Seq(Seq("__b")),
-      s"expected only the P-row offsets window unpartitioned:\n${plan.take(1500)}")
-    assert(partitioned.map(w => names(w.partitionSpec)) === Seq(Seq("__b")),
-      s"expected one running-sum window partitioned by __b:\n${plan.take(1500)}")
+    val specs = windowExecs(df).map(_.partitionSpec.flatMap(_.references.map(_.name)))
+    assert(specs === Seq(Seq("__b")), "expected one window, the running" +
+      s" sum partitioned by __b, and no unpartitioned one:\n${plan.take(1500)}")
   }
 
   /** `body`'s result plus the executed plans of the checkpoint actions
