@@ -89,8 +89,10 @@ class PlanSweepSpec extends SparkSpec
     * read against its source before being admitted (round 11). */
   private val globalWindowAllowed: Set[String] = Set(
     // dimension-bounded running windows: the part catalog ranked by
-    // revenue (abc), suffix minima over the size domain (skyline)
-    "q_abc_pareto", "q_skyline_pareto",
+    // revenue (abc), suffix minima over the size domain (skyline), the
+    // cumulative lift over ≤ 10 decile rows, per-lang offsets over the
+    // lang domain (ccnet)
+    "q_abc_pareto", "q_skyline_pareto", "q_eval_lift", "q_quality_ccnet",
     // calendar/time-grid censuses: the window runs over a day- or
     // batch-hour-bounded relation the corpus was partial-agged onto
     // (each op's scaladoc carries the metadata-scale exemption)
