@@ -1,85 +1,77 @@
 package graft
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
+
+/** The driver's bench main, and the one timing protocol of every timed
+  * main (Bench, ScaleBench, Profile): [[rep]] runs a key once, [[floor]]
+  * repeats it until the run reproduces its own fastest time.
+  *
+  * Memo artifacts are not pre-built: `Memo.parquet` builds eagerly
+  * inside the builder call, so the first rep of an artifact's first
+  * consumer pays the build, and the floor — the minimum of its reps —
+  * never contains it; the build costs that key one extra rep. A floor
+  * therefore measures the reuse state a session serves every later
+  * consumer from. `memo_warmup_sec` is the sum of the builds the
+  * measured phase ran ([[graft.ops.Memo.trackBuilds]]), each also
+  * printed as a `# memo build` line.
+  */
 object Bench {
+  /** Seconds to build `fn(spark, dir)` and compute every row and column
+    * of its result, or -1 if it fails. A noop write, not `count()`: a
+    * count lets the optimizer prune whatever it does not read (columns,
+    * a running-sum window, a final sort), and the user receives the
+    * whole result. Then [[Session.release]], untimed, so a heavy key's
+    * blocks and garbage are not paid for by whoever runs next. */
+  def rep(spark: SparkSession, fn: (SparkSession, String) => DataFrame,
+      dir: String): Double = {
+    val t0 = System.nanoTime()
+    val sec =
+      try {
+        fn(spark, dir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch {
+        // a failure reports -1, NOT its time-to-failure — otherwise
+        // failures are indistinguishable from fast successes
+        case NonFatal(_) => -1.0
+      }
+    Session.release(spark)
+    sec
+  }
+
+  /** Verified floor (VERDICT r8 fix #2) and the reps it took, in order.
+    * A one-shot number inherits whatever heap/page-cache state the
+    * previous keys left behind, and a plain min-of-2 can draw the same
+    * GC/scheduler stall twice. So: keep sampling (2..4 reps) until the
+    * two FASTEST reps agree within 15%, then report their min — a floor
+    * the run itself reproduced. Stable keys stop at 2 reps; noisy ones
+    * and a memo build's first rep pay 3-4. A failed first rep returns
+    * -1 at once; a later failed rep is dropped (the key already proved
+    * it runs) but counts toward the 4-rep cap. */
+  def floor(spark: SparkSession, fn: (SparkSession, String) => DataFrame,
+      dir: String): (Double, Seq[Double]) = {
+    val reps = scala.collection.mutable.ArrayBuffer(rep(spark, fn, dir))
+    def good = reps.filter(_ >= 0).sorted
+    def settled = good.length >= 2 && good(1) - good(0) <= 0.15 * good(0)
+    if (reps.head >= 0)
+      while (reps.length < 4 && !settled) reps += rep(spark, fn, dir)
+    (if (reps.head < 0) -1.0 else good.head, reps.toSeq)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local(32)
     // untimed warmup: run EVERY query once at the smallest SF so JIT +
     // first-codegen + first-broadcast cost never lands inside a
-    // measured rep (each query is only measured once). NonFatal only:
-    // an OOM here means the measured run would lie — let it abort.
+    // measured rep (rep catches NonFatal only: an OOM here means the
+    // measured run would lie — let it abort)
     val w = "/root/testdata/sf0.001"
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try { fn(spark, w).count() } catch { case NonFatal(_) => () }
-      Session.release(spark)
-    }
-    // untimed Memo pre-materialization AT THE TARGET SF: the shared
-    // artifacts (shingle index, cluster/semantic labels, ANN pairs, PQ
-    // codebook, BPE merges, basket support) are built once per
-    // (session, corpus), so whichever consumer ran first used to pay
-    // the mining cost inside its timed region — per-key numbers swung
-    // 2× round-over-round with map iteration order (VERDICT r7 #6).
-    // One trigger per artifact chain; their cost is reported as its
-    // own memo_warmup line instead of being attributed to a query.
-    val memoTriggers = Seq("q_dedup_cluster", "q_dedup_semantic_keep",
-      "q_embed_pq", "q_bpe_train", "q_basket_pairs", "q_scan_wide_prune",
-      // r12: the collapsed prefix miners share the dup-group census
-      "q_dedup_jaccard_prefix",
-      // r14: the screened containment miner's priced-mass census is a
-      // maintained corpus artifact (ctp-census; VERDICT r13 #2)
-      "q_dedup_containment_prefix")
+    SparkEntry.queries.values.foreach(rep(spark, _, w))
     val memoBuilds = graft.ops.Memo.trackBuilds()
-    val w0 = System.nanoTime()
-    memoTriggers.foreach { k =>
-      SparkEntry.queries.get(k).foreach { fn =>
-        try { fn(spark, sfDir).count() } catch { case NonFatal(_) => () }
-        Session.release(spark)
-      }
-    }
-    val memoSec = (System.nanoTime() - w0) / 1e9
-    // Verified-floor timing (VERDICT r8 fix #2): one-shot numbers
-    // inherited whatever heap/page-cache state the previous 330 keys
-    // left behind — the worst r8 outlier recorded 13.98 s against a
-    // 2.6 s Profile steady state, and a plain min-of-2 still left 59
-    // keys >30% apart across two full runs (both reps can draw the
-    // same GC/scheduler stall). So: keep sampling (2..4 reps) until
-    // the two FASTEST reps agree within 15%, then report their min —
-    // a floor the run itself reproduced, which is what makes two
-    // independent full runs land within the 30% stability criterion.
-    // Stable keys stop at 2 reps; only noisy ones pay 3-4.
     val results = SparkEntry.queries.map { case (name, fn) =>
-      def rep(): Double = {
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case NonFatal(_) => false }
-        // a failed query reports -1, NOT its time-to-failure — otherwise
-        // failures are indistinguishable from fast successes
-        val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        // untimed: drop this query's checkpoint blocks + broadcasts so a
-        // heavy query's garbage isn't paid for by whoever runs next
-        Session.release(spark)
-        sec
-      }
-      val first = rep()
-      val sec =
-        if (first < 0) first
-        else {
-          // transient rep failures are dropped (the key already proved
-          // it runs); the 4-rep cap counts them so a flaky key can't
-          // loop forever
-          var good = List(first)
-          var n = 1
-          var done = false
-          while (!done) {
-            val r = rep(); n += 1
-            if (r >= 0) good = (r :: good).sorted
-            done = n >= 4 ||
-              (good.length >= 2 && good(1) - good(0) <= 0.15 * good(0))
-          }
-          good.head
-        }
-      name -> sec
+      name -> floor(spark, fn, sfDir)._1
     }
+    val builds = memoBuilds()
+    val memoSec = builds.map(_._2).sum
     val total = results.values.filter(_ >= 0).sum
     val failed = results.collect { case (k, v) if v < 0 => k }.toSeq.sorted
     // the driver archives (and parses) only a fixed ~2000-char TAIL of
@@ -115,12 +107,12 @@ object Bench {
     // still matches exactly once.
     println(f"# bench total $total%.1f s over ${results.size} queries" +
       s" (${failed.size} failed) sf=$sfDir")
-    println(f"# memo warmup (shared-artifact materialization, untimed" +
-      f" in per-key numbers) $memoSec%.1f s")
-    // per-artifact decomposition of the warmup chain (VERDICT r11 #7):
-    // only the builds the memo phase itself ran (the sf0.001 JIT pass's
-    // builds are not reported, even when the target sf IS sf0.001)
-    memoBuilds().foreach { case (kind, v) =>
+    println(f"# memo warmup (shared-artifact builds, in first reps the" +
+      f" floors discard) $memoSec%.1f s")
+    // per-artifact decomposition (VERDICT r11 #7): only the builds the
+    // measured phase ran (the sf0.001 JIT pass's builds are not
+    // reported, even when the target sf IS sf0.001)
+    builds.foreach { case (kind, v) =>
       println(f"# memo build $kind $v%.2f s")
     }
     if (failed.nonEmpty) println(s"# failed: ${failed.mkString(" ")}")

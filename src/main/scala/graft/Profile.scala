@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-query plan/timing inspector (not part of the driver contract).
   *
-  * Usage: runMain graft.Profile <sfDir> <queryKey> [reps]
-  * Prints the formatted physical plan once, then wall-clock per rep of
-  * `fn(spark, sfDir).count()` — the same protocol Bench uses, so a
-  * number here is directly comparable to a BENCH_r{N}.json entry.
+  * Usage: runMain graft.Profile <sfDir> <queryKey>
+  * Prints the formatted physical plan once, then each rep
+  * [[Bench.floor]] took and the floor — the same protocol Bench uses,
+  * so a number here is directly comparable to a BENCH_r{N}.json entry.
   */
 object Profile {
   /** Probe sub-plans an open measurement still cites (not part of the
@@ -28,7 +28,6 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val key = args(1)
-    val reps = if (args.length > 2) args(2).toInt else 3
     val spark = Session.local(32)
     try {
       val fn = adhoc.getOrElse(key, SparkEntry.queries(key))
@@ -38,16 +37,9 @@ object Profile {
       // so the timing protocol still works on those keys
       if (!sys.env.contains("SPARK_GRAFT_NOEXPLAIN"))
         fn(spark, sfDir).explain("formatted")
-      (1 to reps).foreach { i =>
-        val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"rep $i: $sec%.3f s ($n rows)")
-        // same untimed per-rep release as Bench: otherwise a
-        // checkpoint-heavy query's reps accumulate retained blocks and
-        // later reps measure heap pressure, not the query
-        Session.release(spark)
-      }
+      val (sec, reps) = Bench.floor(spark, fn, sfDir)
+      reps.zipWithIndex.foreach { case (r, i) => println(f"rep ${i + 1}: $r%.3f s") }
+      println(f"floor: $sec%.3f s")
     } finally spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import scala.util.control.NonFatal
 
 /** Scale-growth harness (VERDICT r8 ask #1): derive corpora K× larger
   * than sf0.1 for the three tables the LLM-pipeline families consume
@@ -124,7 +123,10 @@ object ScaleGen {
   * failure mode; the brute-force twins (q_dedup_embedding,
   * q_sim_cosine_topk is single-query linear) are included precisely
   * because their α SHOULD be ~2 / ~1 — they calibrate the
-  * measurement.
+  * measurement. Each key's time is its [[Bench.floor]]; a key's first
+  * rep builds the memo artifacts it reads, so a filtered run
+  * (`SPARK_GRAFT_SCALE_KEYS`) times the same reuse state a full one
+  * does, with no trigger list to keep in step with the memo chains.
   *
   * Usage: runMain graft.ScaleBench <outJson> <label=dir> [label=dir]…
   */
@@ -179,45 +181,6 @@ object ScaleBench {
     "q_dedup_crossfield" -> "documents",
     "q_graph_assortativity" -> "embeddings")
 
-  /** Shared-artifact builders, run untimed per corpus (their cost is
-    * reported as that corpus's memo_sec — itself a growth number). */
-  private val memoTriggers =
-    Seq("q_dedup_ngram_jaccard", "q_dedup_cluster", "q_dedup_semantic_keep",
-      // r12: the collapsed prefix miners share the dup-group census
-      "q_dedup_jaccard_prefix",
-      // r14: the screened miner's priced-mass census (ctp-census)
-      "q_dedup_containment_prefix")
-
-  /** key → trigger keys whose memo chains it CONSUMES (ADVICE r12 #1):
-    * under SPARK_GRAFT_SCALE_KEYS the warmup must build the artifacts a
-    * selected key READS, not just run selected keys that happen to be
-    * triggers themselves — a consumer-only selection (e.g. probing
-    * `q_dedup_containment_prefix` alone, which reads the shingle and
-    * dup-group memos) would otherwise pay the artifact build inside
-    * its timed number and skew the α the filtered probe exists to
-    * measure. Triggers map to themselves; keys absent here consume no
-    * memoized artifact. Warming the mapped trigger builds the full
-    * chain the consumer reads (Memo builders recurse into their own
-    * inputs). */
-  private val keyChains: Map[String, Seq[String]] = {
-    // shingle-index-only consumers: warming the jaccard miner builds
-    // the shingles (and dup-groups) memo they scan
-    val viaJaccard = Seq("q_dedup_ngram_capped", "q_dedup_containment",
-      "q_dedup_winnow", "q_dedup_edit", "q_dedup_minhash",
-      "q_dedup_simhash", "q_text_novelty")
-    (viaJaccard.map(_ -> Seq("q_dedup_ngram_jaccard")) ++ Seq(
-      "q_dedup_ngram_jaccard" -> Seq("q_dedup_ngram_jaccard"),
-      "q_dedup_jaccard_prefix" -> Seq("q_dedup_jaccard_prefix"),
-      // shingles + dup-groups + its own ctp-census (r14): running the
-      // key itself as the trigger builds the full chain it reads
-      "q_dedup_containment_prefix" -> Seq("q_dedup_containment_prefix"),
-      "q_dedup_cluster" -> Seq("q_dedup_cluster"),
-      "q_split_leakage_safe" -> Seq("q_dedup_cluster"),
-      // builds ann-pairs only (not the semantic-labels layer above it)
-      "q_dedup_embedding_ann" -> Seq("q_dedup_embedding_ann"),
-      "q_dedup_semantic_keep" -> Seq("q_dedup_semantic_keep"))).toMap
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleBench <outJson> <label=dir>…")
     val outJson = args(0)
@@ -239,46 +202,28 @@ object ScaleBench {
 
     // JIT/codegen warmup on the smallest SF, untimed (Bench protocol)
     val w = "/root/testdata/sf0.001"
-    keys.foreach { case (k, _) =>
-      try { SparkEntry.queries(k)(spark, w).count() }
-      catch { case NonFatal(_) => () }
-      Session.release(spark)
-    }
+    keys.foreach { case (k, _) => Bench.rep(spark, SparkEntry.queries(k), w) }
 
     val perCorpus = corpora.map { case (label, dir) =>
       val nRows = Seq("documents", "embeddings", "events")
         .map(t => t -> Tables(spark, dir, t).count()).toMap
+      // no memo phase: a key's first rep builds the artifacts it reads
+      // and its floor discards that rep (Bench scaladoc); memo_sec is
+      // the sum of this corpus's builds — itself a growth number
       val memoBuilds = graft.ops.Memo.trackBuilds()
-      val m0 = System.nanoTime()
-      // under a key filter, warm exactly the artifact chains the
-      // selected keys CONSUME (keyChains) — a filtered miner probe
-      // must not pay the ANN/semantic chain at x30, and a consumer-only
-      // selection must not pay its artifact build in the timed number
-      val triggers =
-        if (keys.size == ScaleBench.keys.size) memoTriggers
-        else keys.flatMap(k => keyChains.getOrElse(k._1, Nil)).distinct
-      triggers.foreach { k =>
-        try { SparkEntry.queries(k)(spark, dir).count() }
-        catch { case NonFatal(_) => () }
-        Session.release(spark)
-      }
-      val memoSec = (System.nanoTime() - m0) / 1e9
-      // per-artifact decomposition of the memo chain at THIS corpus
-      // (VERDICT r11 #7) — this phase's builds only, cache hits record
-      // nothing, and the warmup's builds are not this corpus's
-      memoBuilds().foreach { case (kind, v) =>
-        println(f"# scalebench $label memo build $kind $v%.2f s")
-      }
       val times = keys.map { case (k, fam) =>
-        val t0 = System.nanoTime()
-        val ok = try { SparkEntry.queries(k)(spark, dir).count(); true }
-          catch { case NonFatal(_) => false }
-        val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        Session.release(spark)
+        val sec = Bench.floor(spark, SparkEntry.queries(k), dir)._1
         println(f"# scalebench $label $k $sec%.2f s")
         (k, fam, sec)
       }
-      (label, dir, nRows, memoSec, times)
+      // per-artifact decomposition at THIS corpus (VERDICT r11 #7):
+      // cache hits record nothing, and the warmup's builds are not
+      // this corpus's
+      val builds = memoBuilds()
+      builds.foreach { case (kind, v) =>
+        println(f"# scalebench $label memo build $kind $v%.2f s")
+      }
+      (label, dir, nRows, builds.map(_._2).sum, times)
     }
 
     val first = perCorpus.head

@@ -274,11 +274,10 @@ object LlmOps {
     * 100 TB this census is a maintained table, not per-query work. */
   private[graft] def dupGroups(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    graft.Tables.truncate(
-      docs.groupBy($"text")
-        .agg(min($"doc_id").as("rep_id"),
-          collect_list($"doc_id").as("members"))
-        .select($"rep_id", explode($"members").as("doc_id")))
+    docs.groupBy($"text")
+      .agg(min($"doc_id").as("rep_id"),
+        collect_list($"doc_id").as("members"))
+      .select($"rep_id", explode($"members").as("doc_id"))
   }
 
   /** The memoized dup-group census for the declared corpus — built

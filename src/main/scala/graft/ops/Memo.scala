@@ -57,10 +57,10 @@ private[graft] object Memo {
     (String.valueOf(System.identityHashCode(spark)), s"$kind@$sfDir")
 
   /** Wall-clock seconds of each artifact BUILD this JVM actually ran
-    * (cache hits record nothing) — the decomposition of the
-    * `memo_warmup_sec` line every bench artifact carries (VERDICT r11
-    * #7: the chain was the largest untimed cost and had never been
-    * stage-profiled). A build's seconds EXCLUDE the memo builds it
+    * (cache hits record nothing) — the harnesses' `memo_warmup_sec` /
+    * `memo_sec` is the sum of a phase's entries, and each is printed as
+    * its own `# memo build` line (VERDICT r11 #7: the chain had never
+    * been stage-profiled). A build's seconds EXCLUDE the memo builds it
     * triggers on the same thread (each is recorded under its own
     * kind), so the entries of one phase sum to at most its wall time.
     * Keyed `kind@sfDir`; harnesses print it as comment lines. */
@@ -73,9 +73,9 @@ private[graft] object Memo {
 
   /** Snapshot [[buildSeconds]] now; the returned function lists the
     * builds run since, as (kind, seconds), slowest first. A harness
-    * takes it right before a memo phase, so builds an earlier phase ran
-    * for the same corpus (a warmup over the same dir) are not reported
-    * as this phase's. */
+    * takes it right before its measured phase, so builds an earlier
+    * phase ran for the same corpus (a warmup over the same dir) are not
+    * reported as this phase's. */
   def trackBuilds(): () => Seq[(String, Double)] = {
     import scala.jdk.CollectionConverters._
     val before = buildSeconds.asScala.toMap

@@ -47,6 +47,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * appear in `src/main` only in TwoPass.scala — a second copy of the
   * two-pass trick is a second place for its exactness to break.
   *
+  * Timing policy: every timed main (Bench, ScaleBench, Profile) times
+  * a key through `Bench.rep`/`Bench.floor`, so `System.nanoTime`
+  * appears in `src/main` only in Bench.scala and in ops/Memo.scala
+  * (the per-artifact build seconds) — a second timing loop is a second
+  * protocol whose numbers do not compare with the first's.
+  *
   * Referee policy: a `private[graft]` def or val that no `src/main`
   * code reaches is a formulation only tests run — it belongs in
   * `src/test` (see `Referees`), not on the engine's surface.
@@ -173,6 +179,23 @@ class LintSpec extends AnyFunSuite {
       "take global running totals through TwoPass.cumsum:\n" +
         outside.mkString("\n"))
     assert(sites.nonEmpty, "TwoPass.scala no longer range-partitions")
+  }
+
+  test("System.nanoTime appears in src/main only in Bench.scala and" +
+    " ops/Memo.scala") {
+    val sites = scalaFiles(new java.io.File("src/main")).flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f.toPath)
+      (0 until lines.size()).collect {
+        case i if lines.get(i).contains("System.nanoTime") =>
+          s"${f.getPath}:${i + 1}"
+      }
+    }
+    val outside = sites.filterNot(s => s.contains("/graft/Bench.scala:") ||
+      s.contains("/graft/ops/Memo.scala:"))
+    assert(outside.isEmpty,
+      "time keys through Bench.rep / Bench.floor:\n" + outside.mkString("\n"))
+    assert(sites.exists(_.contains("/Bench.scala:")),
+      "Bench.scala no longer times keys")
   }
 
   test("every private[graft] def/val in src/main is reached from src/main") {

@@ -7,7 +7,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * once; every later read reuses that schema (no listing-and-inference
   * job), and eviction and build races move dir and schema together.
   * The `sfDir` part of each key is a label only — these builders read
-  * no corpus. */
+  * no corpus.
+  *
+  * The timing protocol that relies on it ([[Bench.rep]],
+  * [[Bench.floor]]): a build paid on first construction stays out of
+  * the floor, a failing key reports -1 after one rep, and a rep
+  * evaluates every column of the result. */
 class MemoSpec extends SparkSpec {
   import spark.implicits._
 
@@ -110,5 +115,32 @@ class MemoSpec extends SparkSpec {
     Memo.parquet(spark, corpus, "spec-phase")(spark.range(2).toDF("p"))
     assert(builds().map(_._1) === Seq("spec-phase"))
     assert(builds().forall(_._2 > 0))
+  }
+
+  test("floor leaves out a build paid on first construction") {
+    var built = false
+    val fn = (s: org.apache.spark.sql.SparkSession, _: String) => {
+      // an eager memo build: paid inside the builder call, once
+      if (!built) { built = true; Thread.sleep(2000) }
+      s.range(100).toDF("id")
+    }
+    val (sec, reps) = Bench.floor(spark, fn, corpus)
+    assert(sec >= 0 && sec < 2.0, s"floor $sec s over reps $reps")
+    assert(reps.head >= 2.0 && reps.length >= 2 && reps.length <= 4, s"$reps")
+  }
+
+  test("floor reports -1 after one rep of a failing key") {
+    val fn = (_: org.apache.spark.sql.SparkSession, _: String) =>
+      throw new IllegalStateException("builder fails")
+    assert(Bench.floor(spark, fn, corpus) === ((-1.0, Seq(-1.0))))
+  }
+
+  test("a rep evaluates every column, where count() prunes an unread one") {
+    import org.apache.spark.sql.functions._
+    // row-dependent, so the optimizer cannot fold it away at plan time
+    val df = spark.range(100).select($"id",
+      when($"id" >= 0, raise_error(lit("evaluated"))).as("boom"))
+    assert(df.count() === 100, "count() evaluated the unread column")
+    assert(Bench.rep(spark, (_, _) => df, corpus) === -1.0)
   }
 }

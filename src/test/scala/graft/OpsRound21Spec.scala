@@ -13,6 +13,8 @@ import org.apache.spark.sql.functions._
   *    corpus artifact (ctp-census) vs the inline per-execution census
   *    it replaces (VERDICT r13 #2) — both the final pair set and the
   *    census relation itself.
+  *  - dupGroups: the census its memo build writes, with no
+  *    localCheckpoint before the write.
   *  - TwoPass.cumsum: running sums within key buckets whose bounds and
   *    offsets one scalar subquery computes per execution (so no
   *    checkpoint pins an execution) vs a plain `sum() OVER (ORDER BY
@@ -111,6 +113,13 @@ class OpsRound21Spec extends SparkSpec {
         assert(got === ref, s"$name, nParts=$nParts")
       }
     }
+  }
+
+  test("dupGroups runs no checkpoint: its one consumer, the dup-groups" +
+    " memo build, writes it straight to parquet") {
+    val (_, truncated) = truncatedPlans(
+      ops.LlmOps.dupGroups(Tables(spark, sfDir, "documents")))
+    assert(truncated.isEmpty, truncated.mkString("\n"))
   }
 
   test("TwoPass.cumsum: the Deserialize/Serialize serde pair is gone" +
